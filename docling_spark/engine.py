@@ -163,9 +163,9 @@ def _extract_batches(batches: Iterable[pd.DataFrame],
                     # the grounding markers)
                     doc = convert_deepseekocr(raw, name=name,
                                               filename=tail, binary_hash=bh)
-                elif ext == "ebc" and ebcdic_layouts is not None:
-                    layout = (ebcdic_layouts.get(name)
-                              or ebcdic_layouts.get(tail))
+                elif ext == "ebc":
+                    layout = ((ebcdic_layouts or {}).get(name)
+                              or (ebcdic_layouts or {}).get(tail))
                     if layout is None:
                         raise ValueError(
                             f"no EBCDIC layout registered for {tail!r}")

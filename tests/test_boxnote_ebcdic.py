@@ -72,3 +72,20 @@ def test_ebcdic_max_records():
     doc = convert_ebcdic(raw, layout, name="x", max_records=2)
     # header + 2 rows
     assert doc.tables[0].data.num_rows == 3
+
+
+def test_engine_ebc_without_layout_fails():
+    """An .ebc url always routes to EBCDIC: with no layout registered for
+    it the row fails with an envelope instead of being HTML-parsed into
+    mojibake with status 'success'."""
+    import pandas as pd
+
+    from docling_spark.engine import _extract_batches
+    raw = "HELLO WORLD 12345".encode("cp037")
+    df = pd.DataFrame({"url": ["https://x.test/rec.ebc"], "html": [raw]})
+    for layouts in (None, {}, {"other": '{"records": []}'}):
+        out = next(_extract_batches([df], ebcdic_layouts=layouts))
+        assert out["status"][0] == "failure"
+        assert out["error"][0] == \
+            "ValueError: no EBCDIC layout registered for 'rec.ebc'"
+        assert out["md"][0] is None and out["doc_json"][0] is None
