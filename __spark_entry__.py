@@ -1470,7 +1470,7 @@ def _q_extract_misc(spark, sf_dir):
             layouts[p.stem] = side.read_text()
     pages = spark.createDataFrame(rows, "url string, html binary")
     res = engine.extract_pages(pages, repartition=False,
-                               ebcdic_layouts=layouts)
+                               sidecars={"ebcdic": layouts})
     return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
                       F.md5("md").alias("md_md5"))
 
@@ -1515,7 +1515,7 @@ def _q_extract_arxiv(spark, sf_dir):
             if f.is_file() and f.suffix in (".tex", ".sty", ".bbl")}
     pages = spark.createDataFrame(rows, "url string, html binary")
     res = engine.extract_pages(pages, repartition=False,
-                               latex_inputs=inputs_map)
+                               sidecars={"latex": inputs_map})
     return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
                       F.md5("md").alias("md_md5"))
 
@@ -1543,7 +1543,7 @@ def _q_extract_xbrl(spark, sf_dir):
                            for f in taxdir.iterdir() if f.is_file()}
     pages = spark.createDataFrame(rows, "url string, html binary")
     res = engine.extract_pages(pages, repartition=False,
-                               xbrl_taxonomies=taxes)
+                               sidecars={"xbrl": taxes})
     return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
                       F.md5("md").alias("md_md5"))
 

@@ -25,7 +25,9 @@ document NEVER fails the task; it yields status='failure' + error message.
 
 from __future__ import annotations
 
-import json
+import functools
+import hashlib
+import importlib
 import time
 from typing import Iterable, Iterator, Optional
 
@@ -70,61 +72,146 @@ METRICS_SCHEMA = StructType([
 ])
 
 
+class _Modules:
+    """``_mod.jats`` imports ``docling_spark.jats`` on first use, so the
+    driver, which only reads the table's names, never pays for importing
+    every converter module."""
+
+    def __getattr__(self, module: str):
+        value = importlib.import_module(f".{module}", __package__)
+        setattr(self, module, value)
+        return value
+
+
+_mod = _Modules()
+
+
+def _plain(module: str, func: str):
+    """The common converter call: ``func(raw, name=<stem>,
+    filename=<url tail>, binary_hash=<sha256 mod 2^64>)``."""
+    def convert(raw, name, tail, bh, side):
+        return getattr(getattr(_mod, module), func)(
+            raw, name=name, filename=tail, binary_hash=bh)
+    return convert
+
+
+def _ebcdic(raw, name, tail, bh, layout):
+    if layout is None:
+        raise ValueError(f"no EBCDIC layout registered for {tail!r}")
+    return _mod.ebcdic.convert_ebcdic(raw, layout, name=tail, filename=tail,
+                                      binary_hash=bh)
+
+
+_OLE = b"\xd0\xcf\x11\xe0"
+
+# Format dispatch (the Spark analog of Docling's format->backend table,
+# document_converter.py): the FIRST row whose ``match(ext, raw)`` holds
+# converts the row with ``convert(raw, name, tail, bh, side)``. ``tail`` is
+# the url's last path segment, ``ext`` its lower-cased extension ("html"
+# when there is none), ``name`` the tail without it, ``bh`` the document
+# hash, and ``side`` the side input that ``extract_pages(sidecars=)`` holds
+# for this converter and row. Every row tests the extension before any
+# content sniff; the %PDF- magic wins over any extension, and HTML (the
+# Common-Crawl case) is the fall-through.
+CONVERTERS = (
+    ("pdf", lambda ext, raw: ext == "pdf" or raw[:5] == b"%PDF-",
+     lambda raw, name, tail, bh, side: _mod.pdfdoc.convert_pdf(
+         raw, name=name, filename=tail, binary_hash=bh,
+         password=side or "")),
+    ("deepseekocr", lambda ext, raw: ext == "md" and (
+        b"<|ref|>" in raw[:65536] or b"<|det|>" in raw[:65536]),
+     _plain("deepseekocr", "convert_deepseekocr")),
+    ("ebcdic", lambda ext, raw: ext == "ebc", _ebcdic),
+    ("md", lambda ext, raw: ext == "md",
+     _plain("formats", "convert_markdown")),
+    ("csv", lambda ext, raw: ext == "csv", _plain("formats", "convert_csv")),
+    ("vtt", lambda ext, raw: ext == "vtt", _plain("formats", "convert_vtt")),
+    ("epub", lambda ext, raw: ext == "epub",
+     _plain("formats", "convert_epub")),
+    ("eml", lambda ext, raw: ext == "eml",
+     _plain("formats", "convert_email")),
+    ("asciidoc", lambda ext, raw: ext in ("adoc", "asciidoc"),
+     _plain("formats", "convert_asciidoc")),
+    ("docx", lambda ext, raw: ext == "docx",
+     _plain("msword", "convert_docx")),
+    ("xlsx", lambda ext, raw: ext in ("xlsx", "xlsm"),
+     _plain("msexcel", "convert_xlsx")),
+    ("xls", lambda ext, raw: ext == "xls", _plain("legacy", "convert_xls")),
+    ("doc", lambda ext, raw: ext == "doc" and raw[:4] == _OLE,
+     _plain("worddoc", "convert_doc")),
+    ("ppt", lambda ext, raw: ext == "ppt" and raw[:4] == _OLE,
+     _plain("pptbin", "convert_ppt")),
+    ("pptx", lambda ext, raw: ext == "pptx",
+     _plain("mspptx", "convert_pptx")),
+    ("odf", lambda ext, raw: ext in ("odt", "ods", "odp"),
+     _plain("odf", "convert_odf")),
+    ("metsgbs", lambda ext, raw: ext in ("gz", "tgz")
+     and raw[:2] == b"\x1f\x8b" and _mod.metsgbs.looks_like_metsgbs(raw),
+     _plain("metsgbs", "convert_metsgbs")),
+    ("xbrl", lambda ext, raw: ext == "xml" and _mod.xbrl.looks_like_xbrl(raw),
+     lambda raw, name, tail, bh, side: _mod.xbrl.convert_xbrl(
+         raw, taxonomy=side or {}, name=name, filename=tail,
+         binary_hash=bh)),
+    ("jats", lambda ext, raw: ext in ("nxml", "jats") or (
+        ext == "xml" and _mod.jats.looks_like_jats(raw)),
+     _plain("jats", "convert_jats")),
+    ("uspto", lambda ext, raw: ext in ("xml", "txt")
+     and _mod.uspto.looks_like_uspto(raw),
+     lambda raw, name, tail, bh, side: _mod.uspto.convert_uspto(
+         raw, name=tail, filename=tail, binary_hash=bh)),
+    ("boxnote", lambda ext, raw: ext == "boxnote",
+     _plain("boxnote", "convert_boxnote")),
+    # chandra-ocr-2 / dots.ocr VLM output; their Docs carry no binary_hash
+    ("chandra", lambda ext, raw: ext in ("html", "htm")
+     and _mod.vlmparsers.sniff_chandra(raw),
+     lambda raw, name, tail, bh, side: _mod.vlmparsers.convert_chandra(
+         raw, name=name, filename=tail)),
+    ("dots", lambda ext, raw: ext == "json"
+     and _mod.vlmparsers.sniff_dots(raw),
+     lambda raw, name, tail, bh, side: _mod.vlmparsers.convert_dots(
+         raw, name=name, filename=tail)),
+    ("latex", lambda ext, raw: ext == "tex",
+     lambda raw, name, tail, bh, side: _mod.latex.convert_latex(
+         raw, name=name, filename=tail, binary_hash=bh, inputs=side)),
+    ("html", lambda ext, raw: True,
+     lambda raw, name, tail, bh, side: _mod.extractor.HtmlExtractor()
+     .convert(raw, name=name, filename=name + ".html", binary_hash=bh)),
+)
+
+# Opt-in export columns (Docling OutputFormat doctags / html): name ->
+# (module, serializer). They are appended to EXTRACT_SCHEMA in this order.
+EXPORTS = {
+    "doctags": ("serialize", "to_doctags"),
+    "html": ("serialize_html", "to_html"),
+}
+
+
 def _extract_batches(batches: Iterable[pd.DataFrame],
-                     ebcdic_layouts: Optional[dict] = None,
-                     xbrl_taxonomies: Optional[dict] = None,
-                     latex_inputs: Optional[dict] = None,
-                     with_doctags: bool = False,
-                     with_html: bool = False,
-                     pdf_passwords: Optional[dict] = None
+                     sidecars: Optional[dict] = None,
+                     exports: Iterable[str] = (),
                      ) -> Iterator[pd.DataFrame]:
-    r"""mapInPandas worker: one call per Arrow batch; per-doc error envelope.
+    """mapInPandas worker: one call per Arrow batch; per-doc error envelope.
 
-    ``ebcdic_layouts`` maps a url basename (without extension) to its
-    copybook layout JSON - EBCDIC payloads are undecodable without one, so
-    the engine takes the mapping as a small broadcastable dict (the Spark
-    analog of the reference's sidecar ``.layout.json`` files).
-    ``xbrl_taxonomies`` maps a url basename to a {path: bytes} taxonomy
-    mapping (the reference's taxonomy-package directory option).
-    ``latex_inputs`` maps a url basename to a {filename: bytes} mapping
-    for \input/\include resolution (multi-file arXiv projects).
+    Each row goes to the first ``CONVERTERS`` entry that matches it;
+    ``sidecars`` and ``exports`` are described on ``extract_pages``.
     """
-    # Imports inside the function so the closure ships cleanly to executors.
-    import hashlib
-
     from pyspark import TaskContext
 
-    from .extractor import HtmlExtractor
-    from .formats import (convert_asciidoc, convert_csv, convert_email,
-                          convert_epub, convert_markdown, convert_vtt)
-    from .boxnote import convert_boxnote
-    from .jats import convert_jats, looks_like_jats
-    from .latex import convert_latex
-    from .uspto import convert_uspto, looks_like_uspto
-    from .msexcel import convert_xlsx
-    from .mspptx import convert_pptx
-    from .msword import convert_docx
-    from .odf import convert_odf
-    from .deepseekocr import convert_deepseekocr
-    from .vlmparsers import (convert_chandra, convert_dots, sniff_chandra,
-                             sniff_dots)
-    from .ebcdic import convert_ebcdic
-    from .metsgbs import convert_metsgbs, looks_like_metsgbs
-    from .pdfdoc import convert_pdf
-    from .xbrl import convert_xbrl, looks_like_xbrl
-    from .serialize import (to_doctags, to_indented_text, to_json,
-                            to_markdown)
+    from .serialize import to_indented_text, to_json, to_markdown
 
     tc = TaskContext.get()
     pid = tc.partitionId() if tc is not None else -1
-    extractor = HtmlExtractor()
+    sidecars = sidecars or {}
+    exporters = [(n, getattr(getattr(_mod, m), f))
+                 for n, (m, f) in EXPORTS.items() if n in exports]
+    names = EXTRACT_SCHEMA.names + [n for n, _ in exporters]
+    # failure envelope: zero counts, NULL outputs and exports
+    failed = dict.fromkeys(names)
+    failed.update(status="failure", n_texts=0, n_tables=0, n_pictures=0,
+                  n_pages=0, serialize_ms=0.0)
 
     for pdf in batches:
-        out = {k.name: [] for k in EXTRACT_SCHEMA.fields}
-        if with_doctags:
-            out["doctags"] = []
-        if with_html:
-            out["html"] = []
+        rows = []
         for url, html in zip(pdf["url"].values, pdf["html"].values):
             # Coercion stays INSIDE the try: a row with an unexpected type
             # (string html, None url) must become a failure envelope, never
@@ -146,153 +233,29 @@ def _extract_batches(batches: Iterable[pd.DataFrame],
                 # reference-compatible document hash: sha256(bytes) mod 2^64
                 bh = int.from_bytes(
                     hashlib.sha256(raw).digest()[-8:], "big")
-                # format dispatch by extension (html default, the
-                # Common-Crawl case); md/csv share the model/serializers
-                if ext == "pdf" or raw[:5] == b"%PDF-":
-                    # encrypted PDFs: per-doc password from the
-                    # broadcastable mapping; default "" covers the
-                    # common owner-restricted empty-user-password case
-                    pw = ((pdf_passwords or {}).get(name)
-                          or (pdf_passwords or {}).get(tail) or "")
-                    doc = convert_pdf(raw, name=name,
-                                      filename=tail, binary_hash=bh,
-                                      password=pw)
-                elif ext == "md" and (b"<|ref|>" in raw[:65536]
-                                      or b"<|det|>" in raw[:65536]):
-                    # DeepSeek-OCR annotated markdown (content sniff on
-                    # the grounding markers)
-                    doc = convert_deepseekocr(raw, name=name,
-                                              filename=tail, binary_hash=bh)
-                elif ext == "ebc":
-                    layout = ((ebcdic_layouts or {}).get(name)
-                              or (ebcdic_layouts or {}).get(tail))
-                    if layout is None:
-                        raise ValueError(
-                            f"no EBCDIC layout registered for {tail!r}")
-                    doc = convert_ebcdic(raw, layout, name=tail,
-                                         filename=tail, binary_hash=bh)
-                elif ext == "md":
-                    doc = convert_markdown(raw, name=name,
-                                           filename=tail, binary_hash=bh)
-                elif ext == "csv":
-                    doc = convert_csv(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif ext == "vtt":
-                    doc = convert_vtt(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif ext == "epub":
-                    doc = convert_epub(raw, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext == "eml":
-                    doc = convert_email(raw, name=name,
-                                        filename=tail, binary_hash=bh)
-                elif ext in ("adoc", "asciidoc"):
-                    doc = convert_asciidoc(raw, name=name,
-                                           filename=tail, binary_hash=bh)
-                elif ext == "docx":
-                    doc = convert_docx(raw, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext in ("xlsx", "xlsm"):
-                    doc = convert_xlsx(raw, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext == "xls":
-                    from .legacy import convert_xls
-                    doc = convert_xls(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif ext == "doc" and raw[:4] == b"\xd0\xcf\x11\xe0":
-                    from .worddoc import convert_doc
-                    doc = convert_doc(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif ext == "ppt" and raw[:4] == b"\xd0\xcf\x11\xe0":
-                    from .pptbin import convert_ppt
-                    doc = convert_ppt(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif ext == "pptx":
-                    doc = convert_pptx(raw, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext in ("odt", "ods", "odp"):
-                    doc = convert_odf(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif (ext in ("gz", "tgz") and raw[:2] == b"\x1f\x8b"
-                      and looks_like_metsgbs(raw)):
-                    doc = convert_metsgbs(raw, name=name,
-                                          filename=tail, binary_hash=bh)
-                elif ext == "xml" and looks_like_xbrl(raw):
-                    tax = ((xbrl_taxonomies or {}).get(name)
-                           or (xbrl_taxonomies or {}).get(tail) or {})
-                    doc = convert_xbrl(raw, taxonomy=tax, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext in ("nxml", "jats") or (
-                        ext == "xml" and looks_like_jats(raw)):
-                    doc = convert_jats(raw, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext in ("xml", "txt") and looks_like_uspto(raw):
-                    doc = convert_uspto(raw, name=tail,
-                                        filename=tail, binary_hash=bh)
-                elif ext == "boxnote":
-                    doc = convert_boxnote(raw, name=name,
-                                          filename=tail, binary_hash=bh)
-                elif ext in ("html", "htm") and sniff_chandra(raw):
-                    # chandra-ocr-2 VLM output: top-level divs with
-                    # data-bbox/data-label in a 0-1000 grid
-                    doc = convert_chandra(raw, name=name, filename=tail)
-                elif ext == "json" and sniff_dots(raw):
-                    # dots.ocr/dots.mocr VLM output: JSON array of
-                    # {bbox, category, text} layout elements
-                    doc = convert_dots(raw, name=name, filename=tail)
-                elif ext == "tex":
-                    lx = ((latex_inputs or {}).get(name)
-                          or (latex_inputs or {}).get(tail))
-                    doc = convert_latex(raw, name=name,
-                                        filename=tail, binary_hash=bh,
-                                        inputs=lx)
-                else:
-                    doc = extractor.convert(raw, name=name,
-                                            filename=name + ".html",
-                                            binary_hash=bh)
+                for conv, match, convert in CONVERTERS:
+                    if match(ext, raw):
+                        break
+                side = sidecars.get(conv) or {}
+                side = side.get(name) or side.get(tail)
+                doc = convert(raw, name, tail, bh, side)
                 t1 = time.perf_counter()
                 md = to_markdown(doc)
                 itxt = to_indented_text(doc)
                 doc_json = to_json(doc)
                 t2 = time.perf_counter()
-                out["url"].append(url)
-                out["status"].append("success")
-                out["doc_json"].append(doc_json)
-                out["md"].append(md)
-                out["itxt"].append(itxt)
-                out["n_texts"].append(len(doc.texts))
-                out["n_tables"].append(len(doc.tables))
-                out["n_pictures"].append(len(doc.pictures))
-                out["n_pages"].append(len(doc.pages))
-                out["html_bytes"].append(len(raw))
-                out["parse_ms"].append((t1 - t0) * 1e3)
-                out["serialize_ms"].append((t2 - t1) * 1e3)
-                out["error"].append(None)
-                if with_doctags:
-                    out["doctags"].append(to_doctags(doc))
-                if with_html:
-                    from .serialize_html import to_html
-                    out["html"].append(to_html(doc))
+                rows.append((
+                    url, "success", doc_json, md, itxt, len(doc.texts),
+                    len(doc.tables), len(doc.pictures), len(doc.pages),
+                    len(raw), (t1 - t0) * 1e3, (t2 - t1) * 1e3, None, pid,
+                    *(export(doc) for _, export in exporters)))
             except Exception as exc:  # never fail the task for one doc
-                out["url"].append(url)
-                out["status"].append("failure")
-                out["doc_json"].append(None)
-                out["md"].append(None)
-                out["itxt"].append(None)
-                out["n_texts"].append(0)
-                out["n_tables"].append(0)
-                out["n_pictures"].append(0)
-                out["n_pages"].append(0)
-                out["html_bytes"].append(len(raw))
-                out["parse_ms"].append((time.perf_counter() - t0) * 1e3)
-                out["serialize_ms"].append(0.0)
-                out["error"].append(f"{type(exc).__name__}: {exc}")
-                if with_doctags:
-                    out["doctags"].append(None)
-                if with_html:
-                    out["html"].append(None)
-            out["partition_id"].append(pid)
-        yield pd.DataFrame(out)
+                rows.append(tuple({
+                    **failed, "url": url, "html_bytes": len(raw),
+                    "parse_ms": (time.perf_counter() - t0) * 1e3,
+                    "error": f"{type(exc).__name__}: {exc}",
+                    "partition_id": pid}.values()))
+        yield pd.DataFrame(rows, columns=names)
 
 
 def load_pages(spark, source: str, fmt: str = "auto") -> DataFrame:
@@ -375,48 +338,47 @@ def extract_pages(
     num_partitions: Optional[int] = None,
     skew_threshold: int = 1 << 20,
     repartition: bool = True,
-    ebcdic_layouts: Optional[dict] = None,
-    xbrl_taxonomies: Optional[dict] = None,
-    latex_inputs: Optional[dict] = None,
-    with_doctags: bool = False,
-    with_html: bool = False,
-    pdf_passwords: Optional[dict] = None,
+    sidecars: Optional[dict] = None,
+    exports: Iterable[str] = (),
 ) -> DataFrame:
     """The main job: pages(url, html, ...) -> extraction results.
 
     Column pruning: only (url, html) are shipped into the Python workers -
     Catalyst prunes the parquet scan down to those two columns.
-    ``ebcdic_layouts`` ({basename: layout json}) rides the UDF closure -
-    a driver-side dict small enough to broadcast with the task.
-    ``with_doctags`` adds a DocTags export column (reference OutputFormat
-    doctags; serialize.to_doctags) - opt-in so the default schema stays
-    stable for downstream consumers. ``with_html`` likewise adds the
-    standalone-page HTML export (serialize_html.to_html, reference
-    OutputFormat html).
+
+    ``sidecars`` maps a ``CONVERTERS`` name to ``{basename: side input}``;
+    a row's side input is looked up by its url tail without extension,
+    then by the full tail. The dict rides the UDF (a driver-side dict
+    small enough to ship with the task; the Spark analog of the
+    reference's sidecar files). The converters that read one:
+
+    - ``pdf``: the password of an encrypted PDF (default ``""``);
+    - ``ebcdic``: the copybook layout JSON; an ``.ebc`` row without one
+      fails, since EBCDIC payloads are undecodable without it;
+    - ``xbrl``: a ``{path: bytes}`` taxonomy package;
+    - ``latex``: ``{filename: bytes}`` for ``\\input``/``\\include``.
+
+    ``exports`` adds opt-in string columns after ``EXTRACT_SCHEMA``, in
+    ``EXPORTS`` order: ``doctags`` (serialize.to_doctags) and ``html``
+    (serialize_html.to_html, a standalone page). The default schema stays
+    ``EXTRACT_SCHEMA``.
+
+    Unknown ``sidecars`` keys or ``exports`` names raise ``ValueError``.
     """
+    known = [c for c, _, _ in CONVERTERS]
+    for label, got, allowed in (("sidecars converter", sidecars or {}, known),
+                                ("export", exports, list(EXPORTS))):
+        unknown = sorted(set(got) - set(allowed))
+        if unknown:
+            raise ValueError(f"unknown {label} {unknown}; expected one of "
+                             f"{allowed}")
     cols = pages.select("url", "html")
     if repartition:
         cols = partition_pages(cols, num_partitions, skew_threshold)
-    schema = EXTRACT_SCHEMA
-    extra_fields = []
-    if with_doctags:
-        extra_fields.append(StructField("doctags", StringType(), True))
-    if with_html:
-        extra_fields.append(StructField("html", StringType(), True))
-    if extra_fields:
-        schema = StructType(EXTRACT_SCHEMA.fields + extra_fields)
-    if ebcdic_layouts is None and xbrl_taxonomies is None \
-            and latex_inputs is None and not with_doctags \
-            and not with_html and pdf_passwords is None:
-        fn = _extract_batches
-    else:
-        def fn(batches, _lay=ebcdic_layouts, _tax=xbrl_taxonomies,
-               _lx=latex_inputs, _dt=with_doctags, _wh=with_html,
-               _pw=pdf_passwords):
-            return _extract_batches(batches, ebcdic_layouts=_lay,
-                                    xbrl_taxonomies=_tax,
-                                    latex_inputs=_lx, with_doctags=_dt,
-                                    with_html=_wh, pdf_passwords=_pw)
+    schema = StructType(EXTRACT_SCHEMA.fields + [
+        StructField(n, StringType(), True) for n in EXPORTS if n in exports])
+    fn = functools.partial(_extract_batches, sidecars=sidecars,
+                           exports=tuple(exports))
     return cols.mapInPandas(fn, schema=schema)
 
 

@@ -90,8 +90,7 @@ def stream_extract_pages(spark, pages_path: str) -> DataFrame:
               .schema("url string, html binary")
               .option("maxFilesPerTrigger", 8)
               .parquet(pages_path))
-    return stream.select("url", "html").mapInPandas(
-        engine._extract_batches, schema=engine.EXTRACT_SCHEMA)
+    return engine.extract_pages(stream, repartition=False)
 
 
 def stream_dedup_pages(spark, pages_path: str,

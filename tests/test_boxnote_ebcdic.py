@@ -84,7 +84,7 @@ def test_engine_ebc_without_layout_fails():
     raw = "HELLO WORLD 12345".encode("cp037")
     df = pd.DataFrame({"url": ["https://x.test/rec.ebc"], "html": [raw]})
     for layouts in (None, {}, {"other": '{"records": []}'}):
-        out = next(_extract_batches([df], ebcdic_layouts=layouts))
+        out = next(_extract_batches([df], sidecars={"ebcdic": layouts}))
         assert out["status"][0] == "failure"
         assert out["error"][0] == \
             "ValueError: no EBCDIC layout registered for 'rec.ebc'"

@@ -356,14 +356,8 @@ def _sha(value) -> str | None:
 def _run_row(url, raw, sidecars, exports) -> dict:
     from docling_spark.engine import _extract_batches
     batch = pd.DataFrame({"url": [url], "html": [raw]})
-    kw = {}
-    for conv, opt in (("ebcdic", "ebcdic_layouts"),
-                      ("latex", "latex_inputs")):
-        if sidecars and conv in sidecars:
-            kw[opt] = sidecars[conv]
-    for name in exports:
-        kw[f"with_{name}"] = True
-    out = next(_extract_batches([batch], **kw))
+    out = next(_extract_batches([batch], sidecars=sidecars,
+                                exports=exports))
     row = out.iloc[0]
     err = row["error"]
     rec = {
@@ -395,6 +389,31 @@ def test_engine_behaviour_snapshot():
     diff = [label for label in expected if got[label] != expected[label]]
     assert not diff, {label: (expected[label], got[label])
                       for label in diff}
+
+
+def test_every_converter_is_reached(monkeypatch):
+    """Each row reaches the converter it was built for, and together the
+    rows reach every ``CONVERTERS`` entry."""
+    from docling_spark import engine
+    seen = []
+
+    def spy(conv, convert):
+        def run(raw, name, tail, bh, side):
+            seen.append(conv)
+            return convert(raw, name, tail, bh, side)
+        return run
+
+    monkeypatch.setattr(engine, "CONVERTERS", tuple(
+        (conv, match, spy(conv, convert))
+        for conv, match, convert in engine.CONVERTERS))
+    routed = {}
+    for label, url, raw, side, exports, conv in _rows():
+        seen.clear()
+        _run_row(url, raw, side, exports)
+        routed[label] = (seen[:], conv)
+    assert {k: v for k, v in routed.items() if v[0] != [v[1]]} == {}
+    assert {c for _, c in routed.values()} == \
+        {c for c, _, _ in engine.CONVERTERS}
 
 
 if __name__ == "__main__":

@@ -3,6 +3,7 @@ parallelism invariance (SURVEY.md §7 v2 machinery)."""
 
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from docling_spark import engine, pages as pages_mod
@@ -163,7 +164,7 @@ def test_extract_pages_with_doctags_column(spark):
              b"<html><body><h1>T</h1><p>hello world</p></body></html>")]
     df = spark.createDataFrame(rows, "url string, html binary")
     out = engine.extract_pages(df, repartition=False,
-                               with_doctags=True).collect()[0]
+                               exports=("doctags",)).collect()[0]
     assert out["status"] == "success"
     dt = out["doctags"]
     assert dt.startswith("<doctag>") and dt.endswith("</doctag>")
@@ -171,6 +172,21 @@ def test_extract_pages_with_doctags_column(spark):
     # default schema unchanged
     cols = engine.extract_pages(df, repartition=False).columns
     assert "doctags" not in cols
+
+
+def test_extract_pages_rejects_unknown_sidecar_and_export(spark):
+    """A misspelled sidecar converter or export name fails on the driver
+    instead of being ignored."""
+    df = spark.createDataFrame([("https://x/a.ebc", b"")],
+                               "url string, html binary")
+    with pytest.raises(ValueError, match="ebcidc"):
+        engine.extract_pages(df, sidecars={"ebcidc": {"a": "{}"}})
+    with pytest.raises(ValueError, match="doctag"):
+        engine.extract_pages(df, exports=("doctag",))
+    # known names build the plan; export columns follow EXPORTS order
+    cols = engine.extract_pages(df, sidecars={"ebcdic": {}},
+                                exports=("html", "doctags")).columns
+    assert cols[-2:] == ["doctags", "html"]
 
 
 def test_load_pages_resolves_table_and_parquet(spark, tmp_path):
@@ -194,7 +210,7 @@ def test_extract_pages_with_html_column(spark):
              b"<html><body><h2>T</h2><p>hello</p></body></html>")]
     df = spark.createDataFrame(rows, "url string, html binary")
     out = engine.extract_pages(df, repartition=False,
-                               with_html=True).collect()[0]
+                               exports=("html",)).collect()[0]
     assert out["status"] == "success"
     page = out["html"]
     assert page.startswith("<!DOCTYPE html>")

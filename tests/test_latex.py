@@ -85,7 +85,7 @@ def test_never_raises_on_garbage():
 
 def test_engine_multifile_arxiv_inputs():
     """Multi-file arXiv projects convert byte-identically THROUGH the
-    Spark engine via the latex_inputs mapping."""
+    Spark engine via the latex sidecar mapping."""
     import pandas as pd
 
     from docling_spark.engine import _extract_batches
@@ -97,7 +97,7 @@ def test_engine_multifile_arxiv_inputs():
     df = pd.DataFrame({"url": ["https://x.test/2310.06825.tex"],
                        "html": [(base / "main.tex").read_bytes()]})
     out = next(_extract_batches(
-        [df], latex_inputs={"2310.06825": inputs}))
+        [df], sidecars={"latex": {"2310.06825": inputs}}))
     assert out["status"][0] == "success", out["error"][0]
     exp = (GT / "2310.06825_main.tex.md").read_text()
     assert out["md"][0] == exp

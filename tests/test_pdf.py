@@ -204,11 +204,12 @@ def test_engine_dispatch_ebcdic_layout_mapping():
               ).read_text()
     df = pd.DataFrame({"url": [f"https://x.test/{ebc.name}"],
                        "html": [ebc.read_bytes()]})
-    out = next(_extract_batches([df], ebcdic_layouts={ebc.stem: layout}))
+    out = next(_extract_batches([df],
+                                sidecars={"ebcdic": {ebc.stem: layout}}))
     assert out["status"][0] == "success", out["error"][0]
     assert out["n_tables"][0] >= 1
     # without a layout the row fails with an envelope, not a crash
-    out2 = next(_extract_batches([df], ebcdic_layouts={}))
+    out2 = next(_extract_batches([df], sidecars={"ebcdic": {}}))
     assert out2["status"][0] == "failure"
 
 
@@ -1031,7 +1032,7 @@ class TestEncryptedPdf:
         assert rc4(b"Key", b"Plaintext").hex() == "bbf316e8d940af0ad3"
 
     def test_engine_password_mapping(self, spark):
-        """pdf_passwords rides the UDF closure like ebcdic_layouts; an
+        """The pdf sidecar rides the UDF like the ebcdic one; an
         encrypted doc WITHOUT its password yields a failure envelope,
         never a task failure."""
         from docling_spark import engine
@@ -1040,7 +1041,7 @@ class TestEncryptedPdf:
         df = spark.createDataFrame(rows, "url string, html binary")
         ok = engine.extract_pages(
             df, repartition=False,
-            pdf_passwords={"2206.01062_pg3": "1234"}).collect()[0]
+            sidecars={"pdf": {"2206.01062_pg3": "1234"}}).collect()[0]
         assert ok["status"] == "success" and ok["n_pages"] == 1
         bad = engine.extract_pages(df, repartition=False).collect()[0]
         assert bad["status"] == "failure"

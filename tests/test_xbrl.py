@@ -128,7 +128,7 @@ def test_engine_dispatch_xbrl():
     df = pd.DataFrame({"url": ["https://x.test/mlac-20251231.xml"],
                        "html": [raw]})
     out = next(_extract_batches(
-        [df], xbrl_taxonomies={"mlac-20251231": tax}))
+        [df], sidecars={"xbrl": {"mlac-20251231": tax}}))
     assert out["status"][0] == "success", out["error"][0]
     expected = (GT / "mlac-20251231.xml.md").read_text()
     assert out["md"][0] == expected
