@@ -37,7 +37,6 @@ MAX_FILE_BYTES = 256 << 20
 MAX_TOTAL_BYTES = 1 << 30
 
 _BBOX_RE = re.compile(r"bbox (\d+) (\d+) (\d+) (\d+)")
-_WCONF_RE = re.compile(r"x_wconf (\d+(?:\.\d+)?)")
 _SPAN_RE = re.compile(
     r"<span[^>]*class=[\"'](ocrx_word|ocr_line)[\"'][^>]*>", re.I)
 
@@ -66,11 +65,6 @@ def _extract_rect(title: str):
     if not m:
         return None
     return tuple(int(x) for x in m.groups())  # l, t, r, b (top-left origin)
-
-
-def _extract_confidence(title: str) -> float:
-    m = _WCONF_RE.search(title or "")
-    return float(m.group(1)) / 100.0 if m else 1.0
 
 
 def _hocr_cells(content: bytes):

@@ -339,11 +339,6 @@ def _build_huff(counts, symbols):
     return lut, codes
 
 
-def _extend(v, t):
-    """T.81 F.2.2.1 EXTEND: v (t bits) -> signed coefficient value."""
-    return v - (1 << t) + 1 if t and v < (1 << (t - 1)) else v
-
-
 class _BitReader:
     """MSB-first bit reader over an UNSTUFFED entropy segment, with a
     byte-fed accumulator: symbols resolve via one 8-bit LUT index and

@@ -477,23 +477,6 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame,
                     F.round("cosine", 6).alias("cosine"), "rank"))
 
 
-def embedding_dedup(embeddings: DataFrame, dim: int,
-                    threshold: float = 0.95, n_planes: int = 10,
-                    seed: int = 7) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via LSH buckets + exact verify."""
-    corpus = lsh_bucket(with_normalized(embeddings), dim, n_planes, seed,
-                        col="norm_emb")
-    l = corpus.select(F.col("vec_id").alias("id_a"),
-                      F.col("norm_emb").alias("emb_a"), "bucket")
-    r = corpus.select(F.col("vec_id").alias("id_b"),
-                      F.col("norm_emb").alias("emb_b"), "bucket")
-    pairs = l.join(r, ["bucket"]).where(F.col("id_a") < F.col("id_b"))
-    pairs = pairs.withColumn("cosine", _dot(F.col("emb_a"), F.col("emb_b")))
-    return (pairs.where(F.col("cosine") >= threshold)
-            .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-            .distinct())
-
-
 def embedding_profile(embeddings: DataFrame, col: str = "embedding",
                       label_col: str = "label") -> DataFrame:
     """Per-label embedding-column QC - the gate every vector corpus

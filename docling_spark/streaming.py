@@ -2,22 +2,14 @@
 
 Batch twins of each streaming query live beside the stream factories so the
 DuckDB oracle can check semantics on the parquet snapshot; the streaming
-variants add watermarks for late data. Stateful sessionization uses
-``applyInPandasWithState`` - the Spark analog of a custom stateful operator.
+variants add watermarks for late data. The streams cover hourly event
+counts, extraction ingest over a landing directory and digest-keyed dedup;
+sessionization has a batch (window-function) form only.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Tuple
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType, IntegerType, LongType, StringType, StructField,
-    StructType, TimestampType,
-)
 
 
 # ------------------------------------------------------------ batch twins
@@ -43,17 +35,6 @@ def hourly_event_counts(events: DataFrame) -> DataFrame:
             "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"),
              decimal_sum("value").alias("total_value"))
-    )
-
-
-def tumbling_window_counts(events: DataFrame, minutes: int = 15) -> DataFrame:
-    """window() based agg - identical shape in batch and streaming."""
-    return (
-        events.groupBy(F.window("ts", f"{minutes} minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("window.start").alias("window_start"),
-                F.col("window.end").alias("window_end"),
-                "event_type", "n_events")
     )
 
 
@@ -115,75 +96,6 @@ def stream_dedup_pages(spark, pages_path: str,
             .withColumn("digest", F.sha2(F.col("html"), 256))
             .withWatermark("warc_ts", watermark)
             .dropDuplicatesWithinWatermark(["digest"]))
-
-
-SESSION_STATE_SCHEMA = StructType([
-    StructField("last_ts", LongType()),
-    StructField("n_events", LongType()),
-    StructField("total_value", DoubleType()),
-])
-
-SESSION_OUTPUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("session_start", TimestampType()),
-    StructField("session_end", TimestampType()),
-    StructField("n_events", LongType()),
-    StructField("total_value", DoubleType()),
-])
-
-
-def _sessionize_group(key: Tuple, pdfs: Iterable[pd.DataFrame],
-                      state: GroupState):
-    """Custom stateful operator: 30-minute-gap sessionization."""
-    gap_us = 30 * 60 * 1_000_000
-    (user_id,) = key
-    rows = pd.concat(list(pdfs)).sort_values("ts")
-    sessions = []
-    if state.exists:
-        last_ts, n_events, total_value = state.get
-        start_ts = last_ts  # approximation: previous session continues
-    else:
-        last_ts = None
-        n_events = 0
-        total_value = 0.0
-        start_ts = None
-    for ts, value in zip(rows["ts"], rows["value"]):
-        ts_us = int(ts.value // 1000)
-        if last_ts is not None and ts_us - last_ts > gap_us:
-            sessions.append((user_id, pd.Timestamp(start_ts, unit="us"),
-                             pd.Timestamp(last_ts, unit="us"),
-                             n_events, total_value))
-            n_events = 0
-            total_value = 0.0
-            start_ts = ts_us
-        if start_ts is None:
-            start_ts = ts_us
-        last_ts = ts_us
-        n_events += 1
-        total_value += float(value or 0.0)
-    state.update((last_ts, n_events, total_value))
-    state.setTimeoutDuration(60 * 60 * 1000)
-    if sessions:
-        yield pd.DataFrame(sessions, columns=[
-            "user_id", "session_start", "session_end", "n_events",
-            "total_value"])
-
-
-def stream_sessionize(spark, events_path: str) -> DataFrame:
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    return (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_group,
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
 
 
 def batch_sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:

@@ -51,12 +51,6 @@ def digit_ratio(col="text") -> Column:
     return F.when(total == 0, 0.0).otherwise(digits / total)
 
 
-def uppercase_ratio(col="text") -> Column:
-    total = F.length(F.col(col))
-    uppers = total - F.length(F.regexp_replace(F.col(col), r"[A-Z]", ""))
-    return F.when(total == 0, 0.0).otherwise(uppers / total)
-
-
 def _word_tokens(col="text") -> Column:
     """Maximal \\w-runs of the lowercased text (equivalent to word-boundary
     matching for ASCII stopwords)."""
