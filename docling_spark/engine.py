@@ -73,9 +73,9 @@ METRICS_SCHEMA = StructType([
 
 
 class _Modules:
-    """``_mod.jats`` imports ``docling_spark.jats`` on first use, so the
-    driver, which only reads the table's names, never pays for importing
-    every converter module."""
+    """``_mod.jats`` imports ``docling_spark.jats`` on first use, so
+    building a plan, which only reads the table's names, never pays for
+    importing every converter module."""
 
     def __getattr__(self, module: str):
         value = importlib.import_module(f".{module}", __package__)
@@ -348,9 +348,9 @@ def extract_pages(
 
     ``sidecars`` maps a ``CONVERTERS`` name to ``{basename: side input}``;
     a row's side input is looked up by its url tail without extension,
-    then by the full tail. The dict rides the UDF (a driver-side dict
-    small enough to ship with the task; the Spark analog of the
-    reference's sidecar files). The converters that read one:
+    then by the full tail. The dict rides the UDF (small enough to ship
+    with each task; the Spark analog of the reference's sidecar files).
+    The converters that read one:
 
     - ``pdf``: the password of an encrypted PDF (default ``""``);
     - ``ebcdic``: the copybook layout JSON; an ``.ebc`` row without one
@@ -363,7 +363,8 @@ def extract_pages(
     (serialize_html.to_html, a standalone page). The default schema stays
     ``EXTRACT_SCHEMA``.
 
-    Unknown ``sidecars`` keys or ``exports`` names raise ``ValueError``.
+    Unknown ``sidecars`` keys or ``exports`` names raise ``ValueError``
+    when the plan is built.
     """
     known = [c for c, _, _ in CONVERTERS]
     for label, got, allowed in (("sidecars converter", sidecars or {}, known),

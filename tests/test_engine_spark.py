@@ -175,8 +175,8 @@ def test_extract_pages_with_doctags_column(spark):
 
 
 def test_extract_pages_rejects_unknown_sidecar_and_export(spark):
-    """A misspelled sidecar converter or export name fails on the driver
-    instead of being ignored."""
+    """A misspelled sidecar converter or export name fails when the plan
+    is built instead of being ignored."""
     df = spark.createDataFrame([("https://x/a.ebc", b"")],
                                "url string, html binary")
     with pytest.raises(ValueError, match="ebcidc"):
