@@ -29,10 +29,13 @@ import functools
 import hashlib
 import importlib
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterable, Iterator, Optional
 
 import pandas as pd
 
+from pyspark import inheritable_thread_target
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -406,12 +409,25 @@ class CheckpointedExtraction:
     """Bucket-wise extraction with a commit manifest enabling resume.
 
     The input is split into ``num_buckets`` disjoint buckets by
-    ``pmod(xxhash64(url), num_buckets)``. Buckets are processed in groups;
-    after each group's output lands, the manifest gains one row per bucket
-    (atomic-enough for parquet-on-posix; an Iceberg snapshot commit in
-    production). ``run()`` anti-joins pending buckets against the manifest,
-    so a re-run after a crash resumes from the last committed group.
+    ``pmod(xxhash64(url), num_buckets)``. Buckets are processed in fixed
+    groups; each group writes its results, then its metrics, then one
+    manifest file holding one row per bucket (atomic-enough for
+    parquet-on-posix; an Iceberg snapshot commit in production). ``run()``
+    skips buckets already in the manifest, so a re-run after a crash
+    resumes from the last committed group.
+
+    The commit is pipelined: two groups extract and write at once on a
+    thread pool, while the calling thread appends their manifest files
+    strictly in group order, each after that group's writes have finished.
+    The manifest therefore always holds a prefix of the pending groups, a
+    failure commits no group after the failing one, and ``processed`` lists
+    buckets in group order. Spark jobs started by the pool run in the
+    caller's job group. ``out_dir`` may be a plain path or a URI
+    (``s3://``, ``file://``); resume reads the manifest through Spark, so
+    both forms resume alike.
     """
+
+    MANIFEST_SCHEMA = "bucket int, committed_at double"
 
     def __init__(self, spark: SparkSession, out_dir: str,
                  num_buckets: int = 16, group_size: int = 4):
@@ -424,60 +440,89 @@ class CheckpointedExtraction:
         self.manifest_path = f"{self.out_dir}/manifest"
 
     def committed_buckets(self) -> set[int]:
-        import pathlib
-        if not pathlib.Path(self.manifest_path).exists():
-            return set()
         try:
-            rows = self.spark.read.parquet(self.manifest_path).collect()
-            return {r["bucket"] for r in rows}
-        except Exception:
-            return set()
+            rows = self.spark.read.schema(self.MANIFEST_SCHEMA) \
+                .parquet(self.manifest_path).collect()
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return set()
+            raise
+        return {r["bucket"] for r in rows}
+
+    def _write_group(self, bucketed: DataFrame, gid: int,
+                     full_group: list[int], skew_threshold: int) -> None:
+        # Re-extract the WHOLE fixed group, not just its pending subset:
+        # grp=<gid> is overwritten as a unit, so it must always hold the
+        # full group's rows or a torn manifest would silently drop the
+        # already-committed buckets' output on resume.
+        part = bucketed.where(F.col("bucket").isin(full_group)).drop("bucket")
+        results = extract_pages(part, skew_threshold=skew_threshold)
+        # Idempotent commit protocol: each group's results land in a
+        # key=value subdirectory with overwrite semantics, so a crash
+        # between the results write and the manifest write leaves a
+        # directory that the resumed run simply overwrites - no
+        # duplicate rows, no inflated metrics. (An Iceberg snapshot
+        # commit in production.) Readers of results_path see `grp` as
+        # a discovered partition column.
+        grp_results = f"{self.results_path}/grp={gid}"
+        results.write.mode("overwrite").parquet(grp_results)
+        # Metrics come from ONE scan of the group's own output - never
+        # a re-read of everything committed so far; the known schema
+        # spares a schema-inference job.
+        metrics = partition_metrics(
+            self.spark.read.schema(EXTRACT_SCHEMA).parquet(grp_results))
+        metrics.write.mode("overwrite").parquet(
+            f"{self.metrics_path}/grp={gid}")
 
     def run(self, pages: DataFrame, skew_threshold: int = 1 << 20) -> dict:
         done = self.committed_buckets()
         bucketed = pages.withColumn(
             "bucket", F.pmod(F.xxhash64("url"), F.lit(self.num_buckets)))
-        processed = []
         # Groups are a FIXED partition of range(num_buckets) — never derived
         # from the order-dependent pending list — so a retried group always
         # lands on the same grp=<gid> directory even after a partial commit
         # (a torn manifest write must not shift group boundaries).
+        todo = []
         for gid in range(0, self.num_buckets, self.group_size):
             full_group = list(range(gid, min(gid + self.group_size,
                                              self.num_buckets)))
             group = [b for b in full_group if b not in done]
-            if not group:
-                continue
-            # Re-extract the WHOLE fixed group, not just its pending subset:
-            # grp=<gid> is overwritten as a unit, so it must always hold the
-            # full group's rows or a torn manifest would silently drop the
-            # already-committed buckets' output on resume.
-            part = bucketed.where(
-                F.col("bucket").isin(full_group)).drop("bucket")
-            results = extract_pages(part, skew_threshold=skew_threshold)
-            # Idempotent commit protocol: each group's results land in a
-            # key=value subdirectory with overwrite semantics, so a crash
-            # between the results write and the manifest write leaves a
-            # directory that the resumed run simply overwrites - no
-            # duplicate rows, no inflated metrics. (An Iceberg snapshot
-            # commit in production.) Readers of results_path see `grp` as
-            # a discovered partition column.
-            grp_results = f"{self.results_path}/grp={gid}"
-            results.write.mode("overwrite").parquet(grp_results)
-            # Metrics come from ONE scan of the group's own output - never
-            # a re-read of everything committed so far.
-            metrics = partition_metrics(
-                self.spark.read.parquet(grp_results))
-            metrics.write.mode("overwrite").parquet(
-                f"{self.metrics_path}/grp={gid}")
-            manifest = self.spark.createDataFrame(
-                [(b, time.time()) for b in group], "bucket int, committed_at double")
-            # coalesce(1): the group commit is ONE parquet file, so it is
-            # atomic-enough on posix rename semantics — a crash can lose the
-            # whole group's manifest row-set but never half of it.
-            manifest.coalesce(1).write.mode("append").parquet(
-                self.manifest_path)
-            processed.extend(group)
+            if group:
+                todo.append((gid, full_group, group))
+        processed = []
+        # Two groups in flight hide one group's straggler task and commit
+        # tail; more would widen what a crash must redo. A group is
+        # submitted only after the group two before it committed, so on an
+        # error nothing waits unstarted: the pool's exit waits for the
+        # other group in flight, then the error propagates.
+        in_flight = 2
+        with ThreadPoolExecutor(in_flight) as pool:
+            def submit(gid, full_group, _group):
+                # wrapped per group: each thread gets its own copy of the
+                # caller's local properties (job group, SQL execution id)
+                write = inheritable_thread_target(self.spark)(self._write_group)
+                return pool.submit(write, bucketed, gid, full_group,
+                                   skew_threshold)
+            futures = [submit(*g) for g in todo[:in_flight]]
+            for i, (_, _, group) in enumerate(todo):
+                futures[i].result()
+                # Manifest appends stay on this thread, in group order, so
+                # they never share manifest/_temporary and the manifest
+                # stays a prefix. Rows are built in the JVM: a Python list
+                # would cost a Python-worker task. coalesce(1): the group
+                # commit is ONE parquet file, so it is atomic-enough on
+                # posix rename semantics — a crash can lose the whole
+                # group's manifest row-set but never half of it. inline_outer
+                # keeps both columns nullable, as MANIFEST_SCHEMA has them.
+                now = time.time()
+                self.spark.range(1).select(F.inline_outer(F.array(*[
+                    F.struct(F.lit(b).cast("int").alias("bucket"),
+                             F.lit(now).alias("committed_at"))
+                    for b in group]))
+                ).coalesce(1).write.mode("append").parquet(self.manifest_path)
+                processed.extend(group)
+                if i + in_flight < len(todo):
+                    futures.append(submit(*todo[i + in_flight]))
         return {
             "resumed_from": sorted(done),
             "processed": processed,

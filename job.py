@@ -12,7 +12,8 @@ Submit with:
 The job is resumable: re-submitting with the same --output continues from
 the last committed bucket group (engine.CheckpointedExtraction manifest).
 Per-partition lineage rows land in <output>/metrics; results in
-<output>/results partitioned by commit bucket.
+<output>/results, both partitioned by commit group (grp=<gid>, the first
+bucket of the group).
 """
 
 from __future__ import annotations

@@ -58,9 +58,8 @@ def test_partition_metrics_cover_all_docs(spark):
     assert sum(r["byte_count"] for r in rows) > 0
 
 
-def test_checkpoint_resume(spark, tmp_path):
+def _resume_twice(spark, out):
     pages = _pages(spark, 40)
-    out = str(tmp_path / "run1")
     ck = engine.CheckpointedExtraction(spark, out, num_buckets=4, group_size=2)
     r1 = ck.run(pages)
     assert r1["resumed_from"] == []
@@ -73,6 +72,16 @@ def test_checkpoint_resume(spark, tmp_path):
     assert r2["processed"] == []
     assert sorted(r2["resumed_from"]) == [0, 1, 2, 3]
     assert spark.read.parquet(ck.results_path).count() == 40
+    assert spark.read.parquet(ck.manifest_path).count() == 4
+
+
+def test_checkpoint_resume(spark, tmp_path):
+    _resume_twice(spark, str(tmp_path / "run1"))
+
+
+def test_checkpoint_resume_uri_output(spark, tmp_path):
+    """job.py takes URIs (s3://...); resume must not test a local path."""
+    _resume_twice(spark, (tmp_path / "run1").as_uri())
 
 
 def test_checkpoint_torn_manifest_resume(spark, tmp_path):
@@ -106,6 +115,55 @@ def test_checkpoint_torn_manifest_resume(spark, tmp_path):
     res = spark.read.parquet(ck.results_path)
     assert res.count() == 40
     assert res.select("url").distinct().count() == 40
+
+
+def test_checkpoint_failure_commits_a_prefix(spark, tmp_path, monkeypatch):
+    """A group that fails commits nothing after it; a clean re-run does
+    only the rest."""
+    pages = _pages(spark, 40)
+    out = str(tmp_path / "fail")
+    write = engine.CheckpointedExtraction._write_group
+
+    def failing(self, bucketed, gid, full_group, skew_threshold):
+        if gid == 2:
+            raise RuntimeError("group 2 failed")
+        return write(self, bucketed, gid, full_group, skew_threshold)
+
+    monkeypatch.setattr(engine.CheckpointedExtraction, "_write_group",
+                        failing)
+    ck = engine.CheckpointedExtraction(spark, out, num_buckets=4,
+                                       group_size=1)
+    with pytest.raises(RuntimeError, match="group 2 failed"):
+        ck.run(pages)
+    assert sorted(ck.committed_buckets()) == [0, 1]
+    assert len(list(pathlib.Path(ck.manifest_path).glob(
+        "part-*.parquet"))) == 2
+    monkeypatch.undo()
+    r = engine.CheckpointedExtraction(spark, out, num_buckets=4,
+                                      group_size=1).run(pages)
+    assert r["resumed_from"] == [0, 1]
+    assert r["processed"] == [2, 3]
+    res = spark.read.parquet(ck.results_path)
+    assert res.count() == 40
+    assert res.select("url").distinct().count() == 40
+
+
+def test_checkpoint_jobs_inherit_job_group(spark, tmp_path):
+    """Jobs run on the pool's threads stay in the caller's job group, so
+    statusTracker and cancelJobGroup see them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("ck", "checkpointed extraction")
+    try:
+        engine.CheckpointedExtraction(
+            spark, str(tmp_path / "grp"), num_buckets=4,
+            group_size=1).run(_pages(spark, 40))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # results, metrics and manifest writes of four groups at least
+    assert len(tracker.getJobIdsForGroup("ck")) >= 12
+    assert set(tracker.getJobIdsForGroup()) - ungrouped == set()
 
 
 def test_parallelism_invariance(spark):
