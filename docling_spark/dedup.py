@@ -14,7 +14,7 @@ pair set - never an all-pairs product.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 
 def normalized_text(col="text"):
@@ -386,8 +386,9 @@ def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     GraphFrames): each round every node takes the min of its own label and
     its neighbors' labels, PLUS a pointer-jumping step (label <- label of
     label) so chains collapse in O(log diameter) rounds rather than
-    O(diameter). Convergence is detected with a changed-count action per
-    round; ``localCheckpoint`` cuts the lineage so plans stay flat.
+    O(diameter). Each round is one action: an eager ``localCheckpoint``
+    that cuts the lineage (plans stay flat) and, through an
+    ``Observation``, counts the labels that changed.
 
     Near-dup clusters in web corpora are cliques/stars (diameter <= ~3),
     so this typically converges in 2-3 rounds.
@@ -406,33 +407,32 @@ def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     for _ in range(max_iters):
         nbr_min = (edges.join(labels, edges["b"] == labels["node"])
                    .groupBy("a").agg(F.min("label").alias("nbr_label")))
+        # __old carries the round's input label through to the
+        # convergence count
         stepped = (labels.join(nbr_min, labels["node"] == nbr_min["a"],
                                "left")
                    .select(labels["node"],
                            F.least(labels["label"],
                                    F.coalesce("nbr_label", labels["label"]))
-                           .alias("label")))
+                           .alias("label"),
+                           labels["label"].alias("__old")))
         # pointer jumping: node -> label(label(node))
         parent = stepped.select(F.col("node").alias("pnode"),
                                 F.col("label").alias("plabel"))
-        jumped = (stepped.join(parent,
+        # the round's one action: an eager checkpoint, and an
+        # Observation on it counts the nodes whose label moved
+        moved = Observation()
+        labels = (stepped.join(parent,
                                stepped["label"] == parent["pnode"], "left")
                   .select(stepped["node"],
                           F.least(stepped["label"],
                                   F.coalesce("plabel", stepped["label"]))
-                          .alias("label")))
-        # fold the convergence comparison into the SAME materialization
-        # job (one action per round, not two): __chg flags nodes whose
-        # label moved vs the previous round; the count then only scans
-        # the already-materialized local rows
-        jumped = (jumped.join(labels.select("node",
-                                            F.col("label").alias("__old")),
-                              "node")
-                  .select("node", "label",
-                          (F.col("label") != F.col("__old")).alias("__chg"))
+                          .alias("label"), "__old")
+                  .observe(moved, F.count_if(F.col("label")
+                                             != F.col("__old")).alias("n"))
+                  .drop("__old")
                   .localCheckpoint(eager=True))
-        changed = jumped.where("__chg").count()
-        labels = jumped.drop("__chg")
+        changed = moved.get["n"]
         if changed == 0:
             break
     else:

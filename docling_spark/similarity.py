@@ -384,6 +384,49 @@ def cosine_topk_lsh(embeddings: DataFrame, queries: DataFrame,
                     "rank"))
 
 
+def _ident(col: str) -> str:
+    """``col`` as a backtick-quoted SQL identifier."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _double_sql(x: float) -> str:
+    """A SQL literal that parses to exactly the double ``x``: ``repr``
+    is the shortest string that round-trips, and the parser reads a
+    ``D``-suffixed literal with ``Double.parseDouble``. NaN and the
+    infinities have no literal form."""
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return repr(float(x)) + "D"
+
+
+def _centroids_sql(cents: list) -> str:
+    """``cents`` as one ``array<array<double>>`` SQL expression."""
+    return "array(" + ", ".join(
+        "array(" + ", ".join(_double_sql(x) for x in c) + ")"
+        for c in cents) + ")"
+
+
+def _strided_seeds(embeddings: DataFrame, k: int, col: str) -> list:
+    """The smallest-id vector of each of ``k`` even strides of the
+    ``vec_id`` range, in ``vec_id`` order: one min/max aggregate
+    broadcast into one K-row groupBy. The K rows are sorted here; an
+    ``orderBy`` would add a range-partitioning sample job."""
+    bounds = embeddings.agg(F.min("vec_id").alias("mn"),
+                            F.max("vec_id").alias("mx"))
+    bucket = F.floor(
+        (F.col("vec_id") - F.col("mn")) * k
+        / F.greatest(F.col("mx") - F.col("mn") + 1, F.lit(1)))
+    rows = (embeddings.crossJoin(F.broadcast(bounds))
+            .groupBy(bucket.alias("b"))
+            .agg(F.min("vec_id").alias("sid"),
+                 F.min_by(F.col(_ident(col)), "vec_id").alias("emb"))
+            .collect())
+    return [[float(x) for x in r["emb"]]
+            for r in sorted(rows, key=lambda r: r["sid"])]
+
+
 def seed_centroids(embeddings: DataFrame, n_centroids: int = 8,
                    col="embedding") -> list:
     """Deterministic IVF coarse quantizer: stride the ``vec_id`` range
@@ -394,25 +437,11 @@ def seed_centroids(embeddings: DataFrame, n_centroids: int = 8,
     strided seeding keeps the codebook spread across the corpus (a
     prefix-of-ids seed degenerates when ids correlate with content),
     reproducible, AND SQL-expressible so the DuckDB oracle can rebuild
-    the identical inverted lists. Cost: one min/max agg + one K-row
-    groupBy + one K-row fetch - the codebook is driver state by
-    construction (like the LSH hyperplanes) and is broadcast into
-    literal expressions, never shuffled."""
-    bounds = embeddings.agg(F.min("vec_id").alias("mn"),
-                            F.max("vec_id").alias("mx"))
-    bucket = F.floor(
-        (F.col("vec_id") - F.col("mn")) * n_centroids
-        / F.greatest(F.col("mx") - F.col("mn") + 1, F.lit(1)))
-    # single action: broadcast 1-row bounds, min_by picks the smallest-id
-    # vector per bucket in the same aggregate
-    rows = (embeddings.crossJoin(F.broadcast(bounds))
-            .groupBy(bucket.alias("b"))
-            .agg(F.min("vec_id").alias("sid"),
-                 F.min_by(col, "vec_id").alias("emb"))
-            .orderBy("sid").collect())
+    the identical inverted lists. Cost: one action, a min/max agg
+    broadcast into one K-row groupBy - the codebook is driver state by
+    construction (like the LSH hyperplanes), never shuffled."""
     cents = []
-    for r in rows:
-        v = [float(x) for x in r["emb"]]
+    for v in _strided_seeds(embeddings, n_centroids, col):
         n = math.sqrt(sum(x * x for x in v)) or 1.0
         cents.append([x / n for x in v])
     return cents
@@ -421,8 +450,8 @@ def seed_centroids(embeddings: DataFrame, n_centroids: int = 8,
 def _centroid_sims(cents: list, col):
     """sims[i] = cosine(col, centroid_i) as one JVM array expression
     (``col`` must already be L2-normalized)."""
-    lit = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cents])
-    return F.transform(lit, lambda c: _dot(col, c))
+    return F.transform(F.expr(_centroids_sql(cents)),
+                       lambda c: _dot(col, c))
 
 
 def ivf_topk(embeddings: DataFrame, queries: DataFrame,
@@ -526,19 +555,24 @@ def kmeans_assign(embeddings: DataFrame, k: int = 4, n_iter: int = 3,
     arithmetic mean; an emptied cluster keeps its previous centroid.
 
     Plan shape (100-TB lens): per iteration the corpus is scanned once
-    - assignment is a pure JVM array expression against BROADCAST
-    centroids, and the centroid update is one hash aggregation whose
-    k*dim result values are the ONLY driver state (the sanctioned
-    codebook pattern from IVF). No iteration shuffles the corpus on
-    anything but the k-sized key.
+    - assignment is a pure JVM array expression against the centroids,
+    and the centroid update is one hash aggregation whose k*dim result
+    values are the ONLY driver state (the sanctioned codebook pattern
+    from IVF). No iteration shuffles the corpus on anything but the
+    k-sized key.
 
-    Round-8 plan hygiene (same values, measured 3-4x faster locally):
+    Plan hygiene (same values):
 
-    - iteration centroids ride a broadcast 1-row DataFrame instead of
-      literal expressions, so the iteration plan is STRUCTURALLY
-      CONSTANT and Catalyst analysis + whole-stage codegen compile once
-      instead of once per iteration (fresh literals forced a recompile
-      every round);
+    - each iteration's centroids enter the plan as SQL text with exact
+      double literals (``_centroids_sql``), parsed in one call on the
+      JVM. A broadcast 1-row DataFrame kept the plan structurally
+      constant, but ``spark.createDataFrame`` runs a Python-worker
+      stage per iteration. Measured on 4 CPUs (500 64-dim vectors, warm
+      session), an iteration took 0.63 s with the frame and 0.38 s
+      with SQL text, of which 0.1-0.25 s is analysing and planning the
+      fresh literals. Constant folding makes the centroids one array
+      literal that generated code references as an object, so no
+      iteration compiles new code;
     - the update aggregation is per-dim ``avg(element_at(col, i))``
       over the base rows rather than ``posexplode`` + avg: the explode
       inlined the interpreted higher-order assignment expression into
@@ -549,110 +583,75 @@ def kmeans_assign(embeddings: DataFrame, k: int = 4, n_iter: int = 3,
       diffs at every SF).
 
     Large-k path: SemDeDup at 100 TB wants k ~ sqrt(N) (10^4-10^5),
-    where a k*dim expression - literal or broadcast-data - blows up the
-    Catalyst tree and the interpreted per-row fold costs k*dim lambda
-    invocations per row. When ``k * dim > large_k_threshold`` the
-    assignment runs as an Arrow-batched pandas UDF against a BROADCAST
-    VARIABLE centroid matrix (one numpy matmul per batch via the
-    |x|^2 - 2xC' + |c|^2 expansion, argmin = first occurrence, same
-    tie rule). Distances are computed in float64 either way; numpy's
-    pairwise summation can differ from the JVM fold by an ULP, so the
-    small-k default (which the DuckDB oracle twins) keeps the exact
-    fold, and the large-k path is for the regime where the oracle
-    cannot enumerate k anyway. Unit-tested equal to the fold path at
-    k=256 on separated data.
+    where a k*dim expression blows up the Catalyst tree and the
+    interpreted per-row fold costs k*dim lambda invocations per row.
+    When ``k * dim > large_k_threshold`` the assignment runs as an
+    Arrow-batched pandas UDF against a BROADCAST VARIABLE centroid
+    matrix (one numpy matmul per batch via the |x|^2 - 2xC' + |c|^2
+    expansion, argmin = first occurrence, same tie rule). Distances are
+    computed in float64 either way; numpy's pairwise summation can
+    differ from the JVM fold by an ULP, so the small-k default (which
+    the DuckDB oracle twins) keeps the exact fold, and the large-k path
+    is for the regime where the oracle cannot enumerate k anyway.
+    Unit-tested equal to the fold path at k=256 on separated data.
     """
-    spark = embeddings.sparkSession
-    bounds = embeddings.agg(F.min("vec_id").alias("mn"),
-                            F.max("vec_id").alias("mx"))
-    bucket = F.floor(
-        (F.col("vec_id") - F.col("mn")) * k
-        / F.greatest(F.col("mx") - F.col("mn") + 1, F.lit(1)))
-    rows = (embeddings.crossJoin(F.broadcast(bounds))
-            .groupBy(bucket.alias("b"))
-            .agg(F.min("vec_id").alias("sid"),
-                 F.min_by(col, "vec_id").alias("emb"))
-            .orderBy("sid").collect())
-    cents = [[float(x) for x in r["emb"]] for r in rows]
+    cluster = _kmeans_cluster(embeddings, k, n_iter, col, large_k_threshold)
+    return embeddings.select("vec_id", cluster.alias("cluster"))
 
-    def argmin_expr(dists):
-        # array_position returns the FIRST occurrence -> ties break to
-        # the smaller cluster id
-        return (F.array_position(dists, F.array_min(dists)) - 1) \
-            .cast("int")
 
-    def assign_col():
-        # final-output path: centroid literals, exactly the historical
-        # expression (no join in the returned plan)
-        lit = F.array(*[F.array(*[F.lit(float(x)) for x in c])
-                        for c in cents])
-        dists = F.transform(lit, lambda c: F.aggregate(
-            F.zip_with(F.col(col), c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, v: acc + v))
-        return argmin_expr(dists)
-
+def _kmeans_cluster(embeddings: DataFrame, k: int, n_iter: int, col: str,
+                    large_k_threshold: int = 4096):
+    """Run ``n_iter`` Lloyd iterations (one collect each) and return the
+    cluster-id Column against the final centroids (see
+    :func:`kmeans_assign`)."""
+    cents = _strided_seeds(embeddings, k, col)
     dim = len(cents[0]) if cents else 0
-    use_pandas = k * dim > large_k_threshold
-
-    # The iteration's assignment expression and per-dim average
-    # aggregates are STRUCTURALLY CONSTANT (centroid values ride the
-    # broadcast DataFrame as data) - build the Column trees once here
-    # and reuse them every iteration instead of re-issuing ~350 py4j
-    # calls per round (round-8 second pass: expression construction was
-    # ~1.6 s of the 3.5 s leg). The aggs parse from SQL text (one
-    # round-trip each) - avg(CAST(try_element_at(col, i) AS DOUBLE)) is
-    # the same function chain the DSL built.
-    assign_expr = None
-    if not use_pandas:
-        dists = F.transform(F.col("__cents"), lambda c: F.aggregate(
-            F.zip_with(F.col(col), c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, v: acc + v))
-        assign_expr = argmin_expr(dists)
-    iter_aggs = [F.expr(f"avg(CAST(try_element_at(`{col}`, {i + 1}) "
+    assign = (_pandas_assign if k * dim > large_k_threshold
+              else _fold_assign)
+    q = _ident(col)
+    iter_aggs = [F.expr(f"avg(CAST(try_element_at({q}, {i + 1}) "
                         f"AS DOUBLE))").alias(f"m{i}")
                  for i in range(dim)]
-
-    def with_assign_bc(cents):
-        if use_pandas:
-            return _with_assign_pandas(embeddings, cents, col)
-        # iteration path: same distance fold, centroid VALUES flow as
-        # broadcast data so the plan (and its codegen) never changes
-        cdf = spark.createDataFrame([(cents,)],
-                                    "__cents: array<array<double>>")
-        j = embeddings.crossJoin(F.broadcast(cdf))
-        return j.withColumn("__c", assign_expr).drop("__cents")
     for _ in range(n_iter):
         # per-dim Average over the rows of each cluster: identical
         # accumulation to the exploded per-(c,pos) avg (element_at on a
         # too-short array is NULL and Average skips NULLs, matching the
         # explode variant's absent rows); the all-dims-or-keep guard
         # below preserves the emptied/ragged-cluster rule
-        sums = (with_assign_bc(cents).groupBy("__c").agg(*iter_aggs)
-                .collect())
+        sums = (embeddings.groupBy(assign(cents, col).alias("__c"))
+                .agg(*iter_aggs).collect())
         new = {ci: list(c) for ci, c in enumerate(cents)}
         for r in sums:
             vals = [r[f"m{i}"] for i in range(dim)]
             if all(v is not None for v in vals):
                 new[r["__c"]] = [float(v) for v in vals]
         cents = [new[ci] for ci in range(len(cents))]
-    if use_pandas:
-        return (_with_assign_pandas(embeddings, cents, col)
-                .select("vec_id", F.col("__c").alias("cluster")))
-    return embeddings.select("vec_id", assign_col().alias("cluster"))
+    return assign(cents, col)
 
 
-def _with_assign_pandas(embeddings: DataFrame, cents: list,
-                        col: str) -> DataFrame:
-    """Large-k cluster assignment: centroids as a Spark broadcast
-    variable into an Arrow-batched pandas UDF (one matmul per record
-    batch). Adds a ``__c`` int column; see kmeans_assign's docstring
-    for when this path runs and how it relates to the exact-fold
-    default."""
+def _fold_assign(cents: list, col: str):
+    """Cluster id = argmin over ``cents`` of the squared Euclidean
+    distance, folded left to right in the JVM; ``array_position``
+    returns the FIRST occurrence, so ties break to the smaller id. A
+    NULL embedding folds to NULL distances and a NULL id."""
+    dists = (f"transform({_centroids_sql(cents)}, __cent -> aggregate("
+             f"zip_with({_ident(col)}, __cent, (__a, __b) -> "
+             f"(__a - __b) * (__a - __b)), 0D, (__acc, __v) -> __acc + __v))")
+    return F.expr(
+        f"CAST(array_position({dists}, array_min({dists})) - 1 AS INT)")
+
+
+def _pandas_assign(cents: list, col: str):
+    """Large-k cluster id: centroids as a Spark broadcast variable into
+    an Arrow-batched pandas UDF (one matmul per record batch); see
+    kmeans_assign's docstring for when this path runs and how it
+    relates to the exact-fold default."""
     import numpy as np
+    from pyspark import SparkContext
     from pyspark.sql.functions import pandas_udf
 
-    sc = embeddings.sparkSession.sparkContext
-    bc = sc.broadcast(np.asarray(cents, dtype=np.float64))
+    bc = SparkContext.getOrCreate().broadcast(
+        np.asarray(cents, dtype=np.float64))
 
     @pandas_udf("int")
     def assign(emb: pd.Series) -> pd.Series:
@@ -685,7 +684,7 @@ def _with_assign_pandas(embeddings: DataFrame, cents: list,
             [None if isnull else int(next(am))
              for isnull in null_mask], dtype="object")
 
-    return embeddings.withColumn("__c", assign(F.col(col)))
+    return assign(F.col(_ident(col)))
 
 
 def semantic_dedup(embeddings: DataFrame, k: int = 4, n_iter: int = 3,
@@ -698,7 +697,9 @@ def semantic_dedup(embeddings: DataFrame, k: int = 4, n_iter: int = 3,
     the smallest ``vec_id`` per component.
 
     Output: (vec_id, cluster, group_id, keep) - every input row
-    appears; singletons are their own group with keep = true.
+    appears once; singletons are their own group with keep = true.
+    ``vec_id`` must be unique: the pair join, the component fold and
+    the keep decision all identify a row by it.
 
     Scale shape: the quadratic pair join is bounded per cluster (the
     whole point of the clustering stage - SemDeDup runs k ~ sqrt(N) so
@@ -711,24 +712,20 @@ def semantic_dedup(embeddings: DataFrame, k: int = 4, n_iter: int = 3,
     """
     from .dedup import connected_components
 
-    clusters = kmeans_assign(embeddings, k=k, n_iter=n_iter, col=col)
-    # all consumers read `base` below (both sides of the pair
-    # self-join AND the final output join - base carries vec_id and
-    # cluster), so ONE eager localCheckpoint materializes the
-    # expensive k-means assignment exactly once (the per-query analog
-    # of the persisted intermediate table you'd write at 100 TB);
-    # checkpointing `clusters` separately was a second materialization
-    # job for the same expression. Values are unchanged - this only
-    # cuts recompute.
+    # one eager localCheckpoint materializes the k-means assignment,
+    # the normalized vectors and their prefixes in one projection;
+    # both sides of the pair self-join, the exact stage and the output
+    # read it
     n_pref = 16
     # try_element_at: beyond-length prefixes are NULL (ANSI element_at
     # throws), which NULLs the guard sum and retains the pair for the
     # exact stage - the conservative direction
     pref_cols = [F.try_element_at(F.col("norm_emb"), F.lit(i + 1))
                  .alias(f"p{i}") for i in range(n_pref)]
+    cluster = _kmeans_cluster(embeddings, k, n_iter, col)
     base = (with_normalized(embeddings, col)
-            .join(clusters, "vec_id")
-            .select("vec_id", "cluster", "norm_emb", *pref_cols)
+            .select("vec_id", cluster.alias("cluster"), "norm_emb",
+                    *pref_cols)
             .localCheckpoint(eager=True))
     # Quadratic stage, round-8 restructure (guide §8: decide with small
     # rows, move big rows once). The same-cluster self-join used to

@@ -261,6 +261,43 @@ def test_connected_components_long_chain_converges(spark):
     assert len(out) == 65
 
 
+def _labels_changed_in_last_round(edges, rounds):
+    """The same min-label + pointer-jumping rounds as
+    ``connected_components``, in Python: how many labels the last
+    round changed."""
+    nbrs = {}
+    for a, b in edges:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    label = {n: n for n in nbrs}
+    for _ in range(rounds):
+        stepped = {n: min([label[n]] + [label[m] for m in nbrs[n]])
+                   for n in nbrs}
+        jumped = {n: min(stepped[n], stepped[stepped[n]]) for n in nbrs}
+        changed = sum(jumped[n] != label[n] for n in nbrs)
+        label = jumped
+    return changed
+
+
+@pytest.mark.parametrize("max_iters", [1, 2, 3])
+def test_connected_components_non_convergence_reports_changed(spark,
+                                                              max_iters):
+    """Too few rounds for a 64-edge path must raise, naming exactly the
+    number of labels the last round changed (the per-round counter)."""
+    edges = [(i, i + 1) for i in range(64)]
+    changed = _labels_changed_in_last_round(edges, max_iters)
+    assert changed > 0
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    with pytest.raises(RuntimeError,
+                       match=rf"\({changed} labels still changing\)"):
+        dedup.connected_components(pairs, max_iters=max_iters)
+
+
+def test_connected_components_empty_pairs(spark):
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert dedup.connected_components(pairs).collect() == []
+
+
 # ---------------------------------------------- multiprobe LSH + confidence
 
 def test_lsh_recall_clustered_data(spark):
@@ -1167,20 +1204,8 @@ def test_kmeans_recovers_planted_clusters(spark):
     assignment must be exactly the plant (modulo cluster-id naming,
     which the strided seeding makes deterministic), and re-running
     gives identical labels."""
-    import math
-    import random
-
     from docling_spark import similarity
-    rng = random.Random(13)
-    rows = []
-    centers = [[10.0, 0, 0, 0], [0, 10.0, 0, 0],
-               [0, 0, 10.0, 0], [0, 0, 0, 10.0]]
-    vid = 0
-    for ci, ctr in enumerate(centers):
-        for _ in range(25):
-            rows.append((vid, [c + rng.gauss(0, 0.3) for c in ctr]))
-            vid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    emb = _planted_blobs(spark)
     out = {r.vec_id: r.cluster
            for r in similarity.kmeans_assign(emb, k=4, n_iter=3).collect()}
     # ids 0-24 planted together, 25-49 together, ...
@@ -1267,6 +1292,64 @@ def test_kmeans_large_k_pandas_path_handles_null_rows(spark):
     fold = {r.vec_id: r.cluster for r in similarity.kmeans_assign(
         emb, k=4, n_iter=1, large_k_threshold=1 << 30).collect()}
     assert fold == out
+
+
+def _planted_blobs(spark, per_blob=25):
+    """Four separated 4-dim blobs (10 on axis ci, noise 0.3), ids
+    blob-major."""
+    import random
+    rng = random.Random(13)
+    rows = [(ci * per_blob + j,
+             [10.0 * (d == ci) + rng.gauss(0, 0.3) for d in range(4)])
+            for ci in range(4) for j in range(per_blob)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_kmeans_and_semantic_dedup_build_no_local_frames(spark,
+                                                         monkeypatch):
+    """Centroids reach the plan as SQL text: neither operator builds a
+    DataFrame from driver data (each such frame runs a Python-worker
+    stage)."""
+    from pyspark.sql import SparkSession
+    emb = _planted_blobs(spark)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("createDataFrame called")
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    assert len(similarity.kmeans_assign(emb, k=4, n_iter=3).collect()) == 100
+    assert len(similarity.semantic_dedup(emb, k=4, n_iter=2).collect()) == 100
+
+
+@pytest.mark.parametrize("x", [float("nan"), float("inf"), float("-inf"),
+                               -0.0, 5e-324, 0.1, 1 / 3])
+def test_centroids_sql_round_trips_doubles(spark, x):
+    import struct
+    got = (spark.range(1)
+           .selectExpr(f"{similarity._centroids_sql([[x, 1.0]])} AS c")
+           .first().c)
+    assert struct.pack(">d", got[0][0]) == struct.pack(">d", x)
+    assert got[0][1] == 1.0
+
+
+def test_kmeans_escapes_backticks_in_column_name(spark):
+    emb = _planted_blobs(spark)
+    odd = emb.withColumnRenamed("embedding", "emb`x")
+    plain = {r.vec_id: r.cluster
+             for r in similarity.kmeans_assign(emb, k=4, n_iter=3).collect()}
+    got = {r.vec_id: r.cluster for r in similarity.kmeans_assign(
+        odd, k=4, n_iter=3, col="emb`x").collect()}
+    assert got == plain
+
+
+def test_semantic_dedup_duplicate_vec_id_is_not_amplified(spark):
+    """vec_id must be unique; a duplicated one still yields one output
+    row per input row (no join multiplies it)."""
+    emb = _planted_blobs(spark, per_blob=5)
+    dup = emb.where("vec_id = 7")
+    out = similarity.semantic_dedup(emb.unionByName(dup).unionByName(dup),
+                                    k=4, n_iter=2, threshold=1.0).collect()
+    assert len(out) == 22
+    assert sum(r.vec_id == 7 for r in out) == 3
 
 
 def test_semantic_dedup_drops_clones_keeps_singletons(spark):
