@@ -472,8 +472,7 @@ def _q_url_dedup(spark, sf_dir):
         )).alias("url"))
     ids = variants.select(
         "url",
-        F.conv(F.substring(F.md5(F.col("url")), 1, 15), 16, 10)
-        .cast("long").alias("doc_id"))
+        F.expr(textfns.md5_int_sql("`url`")).alias("doc_id"))
     return webgraph.url_dup_stats(ids)
 
 
@@ -1257,8 +1256,7 @@ def _q_crawl_pipeline(spark, sf_dir):
                                repartition=False)
           .where(F.col("status") == "success"))
     docs = ok.select(
-        F.conv(F.substring(F.md5("url"), 1, 15), 16, 10)
-        .cast("long").alias("doc_id"),
+        F.expr(textfns.md5_int_sql("`url`")).alias("doc_id"),
         F.col("itxt").alias("text"))
     good = docs.join(
         textfns.gopher_quality_flags(docs, min_words=3)

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 
+from docling_spark.textfns import md5_int_sql
+
 
 def normalized_text(col="text"):
     return F.lower(F.regexp_replace(F.trim(F.col(col)), r"\s+", " "))
@@ -109,30 +111,17 @@ def shingles(documents: DataFrame, k: int = 5) -> DataFrame:
     ).where(F.length("shingle") > 0)
 
 
-def _hash64(col, seed, hash_mode: str = "xxhash64"):
-    """Seeded 60/64-bit hash of a string column.
+def _hash64_sql(col_sql: str, seed, hash_mode: str = "xxhash64") -> str:
+    """Seeded 60/64-bit hash of a string column, as SQL text (one parse
+    round-trip instead of ~7 DSL calls).
 
     ``xxhash64`` (default): the JVM intrinsic - the fast production
-    family. ``md5``: first 15 hex chars of md5('<seed>\\x01' || s) as a
-    60-bit int - slower, but DuckDB computes the IDENTICAL value
-    (CAST('0x'||substr(md5(..),1,15) AS BIGINT)), which lets the whole
-    MinHash/SimHash pipeline run under an exact SQL oracle."""
+    family. ``md5``: :func:`textfns.md5_int_sql` of '<seed>\\x01' || s,
+    a 60-bit int - slower, but DuckDB computes the IDENTICAL value,
+    which lets the whole MinHash/SimHash pipeline run under an exact
+    SQL oracle."""
     if hash_mode == "md5":
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{seed}\x01"), col)), 1, 15),
-            16, 10).cast("long")
-    return F.xxhash64(col, F.lit(seed))
-
-
-def _hash64_sql(col_sql: str, seed, hash_mode: str = "xxhash64") -> str:
-    """SQL-text twin of :func:`_hash64` for fast expression builds
-    (one parse round-trip instead of ~7 DSL calls); same functions,
-    same values - pinned by
-    tests/test_operators.py::test_hash64_sql_matches_dsl."""
-    if hash_mode == "md5":
-        return (f"CAST(conv(substring(md5(concat('{seed}\x01', "
-                f"{col_sql})), 1, 15), 16, 10) AS BIGINT)")
+        return md5_int_sql(col_sql, f"{seed}\x01")
     return f"xxhash64({col_sql}, {seed})"
 
 
@@ -293,7 +282,7 @@ def simhash(documents: DataFrame, bits: int = 64,
 
     Pure column algebra: explode tokens, per-bit +-1 votes via bit tests on
     hash64(token), aggregate sums, reassemble the sign bits. In
-    ``hash_mode="md5"`` (the oracle family, see :func:`_hash64`) the top
+    ``hash_mode="md5"`` (the oracle family, see :func:`_hash64_sql`) the top
     4 hash bits are constant-zero, so those positions vote -1 on every
     token - identically in the SQL twin, keeping hamming distances exact.
     """
@@ -302,7 +291,9 @@ def simhash(documents: DataFrame, bits: int = 64,
     toks = toks.where(F.col("tok") != "")
     # hash materialized once per token: referencing the md5 chain in
     # every per-bit vote re-evaluated it ``bits`` times per token
-    h_expr = (_hash64(F.col("tok"), "", "md5") if hash_mode == "md5"
+    # xxhash64 stays seedless: _hash64_sql's xxhash64(tok, seed) hashes
+    # the seed as a second input, which would change every signature
+    h_expr = (F.expr(_hash64_sql("`tok`", "", "md5")) if hash_mode == "md5"
               else F.xxhash64("tok"))
     toks = toks.select("doc_id", h_expr.alias("__h"))
     # vote and signature expressions parse from SQL text - one py4j

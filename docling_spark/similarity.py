@@ -16,6 +16,8 @@ import random
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from docling_spark.textfns import _ident, md5_int, md5_int_sql
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -80,17 +82,6 @@ def random_hyperplanes(dim: int, n_planes: int = 16, seed: int = 42):
     return planes
 
 
-def lsh_bucket(embeddings: DataFrame, dim: int, n_planes: int = 16,
-               seed: int = 42, col="embedding") -> DataFrame:
-    """Sign-bit sketch: bucket id = bits of sign(embedding . plane_i)."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(random_hyperplanes(dim, n_planes, seed)):
-        arr = F.array(*[F.lit(float(x)) for x in plane])
-        bucket = bucket + F.when(_dot(F.col(col), arr) > 0,
-                                 F.lit(1 << i)).otherwise(0)
-    return embeddings.withColumn("bucket", bucket)
-
-
 def _sketch_keys_udf(dim, n_planes: int, seeds: list, masks=None):
     """Vectorized LSH sketch keys: a pandas UDF computing, per Arrow
     batch, one numpy matmul against all tables' hyperplanes at once and
@@ -139,103 +130,47 @@ def _sketch_keys_udf(dim, n_planes: int, seeds: list, masks=None):
     return keys
 
 
-def _md5_bucket(col: str, n_planes: int, seed: int, table: int,
-                w_col=None, int_col: str | None = None):
+def _md5_bucket_sql(col: str, n_planes: int, seed: int, table: int,
+                    w_idx: int, int_col: str) -> str:
     """Sign-bit sketch bucket for ONE table of the md5-derived INTEGER
-    hyperplane family, as pure column algebra.
+    hyperplane family, as SQL text for one ``F.expr`` parse.
 
     Plane entry w(t,i,d) = (md5_60bit("lsh:<seed>:<t>:<i>:<d>") % 17) - 8
     (zero-mean integers in [-8, 8]); the embedding is pre-scaled to
-    integers via floor(x * 1e6), so every dot product is EXACT integer
-    arithmetic - no float summation order, which makes the bucket
-    assignment engine-portable (DuckDB computes the identical bits,
-    the trick that graduated hash_embed to an exact oracle). The
-    gaussian family stays the production default: its planes are
-    isotropic (uniform angular coverage) while the integer family is
-    slightly lattice-quantized - fine for an oracle-twinned fixture,
-    not what you'd pick for recall at scale.
+    integers via floor(x * 1e6) in ``int_col``, so every dot product is
+    EXACT integer arithmetic - no float summation order, which makes
+    the bucket assignment engine-portable (DuckDB computes the
+    identical bits, the trick that graduated hash_embed to an exact
+    oracle). The gaussian family stays the production default: its
+    planes are isotropic (uniform angular coverage) while the integer
+    family is slightly lattice-quantized - fine for an oracle-twinned
+    fixture, not what you'd pick for recall at scale.
 
-    Round 8: the plane entry depends only on (seed, table, i, d), so
-    the md5/conv/substring chain - previously re-evaluated PER ROW per
-    plane per dimension inside the fold - is precomputed driver-side
-    with hashlib (bit-identical: both are md5 of the same ASCII string,
-    first 15 hex digits as a 60-bit non-negative integer, % 17 - 8).
-    When ``w_col`` is given it names a column holding this table's
-    precomputed planes (array<array<long>>, shipped as BROADCAST DATA
-    by the caller - literals at this width made Catalyst analysis of
-    the key expressions the bottleneck); ``slice`` trims each plane to
-    the row's dimensionality so the zip_with pairing is unchanged, and
-    rows wider than the precomputed planes fall back to the original
-    per-row md5 expression (same values, just slower). ``int_col``
-    optionally names an already-projected integer-scaled embedding
-    column, letting the caller evaluate the floor-scale ONCE per row
-    instead of once per (table, plane) dot.
+    The plane entries depend only on (seed, table, i, d), so they are
+    precomputed driver-side (:func:`_md5_plane_weights`) and read from
+    the broadcast ``__w`` column (``w_idx`` is the 1-based index of this
+    table's planes in it); ``slice`` trims each plane to the row's
+    dimensionality. Rows wider than the precomputed planes fall back to
+    the per-element :func:`textfns.md5_int_sql` weight (same values,
+    just slower). Built as SQL text because the Column DSL form cost
+    hundreds of py4j round-trips (~0.5 s per table) to construct.
+    ``tests/test_operators.py::test_md5_bucket_sql_matches_hashlib``
+    pins the values against a hashlib reference.
     """
-    emb_int = (F.col(int_col) if int_col is not None else F.transform(
-        F.col(col), lambda x: F.floor(x.cast("double") * 1000000.0)
-        .cast("long")))
-
-    def dot_slow(i: int):
-        prefix = f"lsh:{seed}:{table}:{i}:"
-        w = lambda d: (F.conv(F.substring(F.md5(F.concat(
-            F.lit(prefix), d.cast("string"))), 1, 15), 16, 10)
-            .cast("long") % 17 - 8)
-        return F.aggregate(
-            F.zip_with(emb_int,
-                       F.sequence(F.lit(0), F.size(F.col(col)) - 1),
-                       lambda x, d: x * w(d)),
-            F.lit(0).cast("long"), lambda acc, v: acc + v)
-
-    bucket = F.lit(0).cast("long")
-    for i in range(n_planes):
-        if w_col is not None:
-            w_ref = F.col(w_col) if isinstance(w_col, str) else w_col
-            plane = F.element_at(w_ref, i + 1)
-            dot_fast = F.aggregate(
-                F.zip_with(emb_int,
-                           F.slice(plane, 1, F.size(F.col(col))),
-                           lambda x, w: x * w),
-                F.lit(0).cast("long"), lambda acc, v: acc + v)
-            dot = F.when(F.size(F.col(col)) <= F.size(plane), dot_fast) \
-                .otherwise(dot_slow(i))
-        else:
-            dot = dot_slow(i)
-        bucket = bucket + F.when(dot > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
-def _md5_bucket_sql(col: str, n_planes: int, seed: int, table: int,
-                    w_idx: int, int_col: str) -> str:
-    """SQL-text twin of :func:`_md5_bucket` (w_col + int_col form):
-    the same expression tree rendered as ONE string for ``F.expr``.
-
-    Building the bucket through the Column DSL costs hundreds of py4j
-    round-trips (~0.5 s per table on this box - construction, not
-    execution); parsing one SQL string is a single round-trip with the
-    tree built JVM-side. Every function, operand order, literal type
-    and CASE/NULL behavior mirrors the DSL form - pinned by
-    ``tests/test_operators.py::test_md5_bucket_sql_matches_dsl`` which
-    compares both columns row-for-row (including a NULL and a ragged
-    wide row) - so bucket values are bit-identical.
-
-    ``w_idx`` is the 1-based index of this table's planes inside the
-    broadcast ``__w`` column.
-    """
+    c, ci = _ident(col), _ident(int_col)
     plane = lambda i: f"element_at(element_at(`__w`, {w_idx}), {i + 1})"
-    prefix = f"lsh:{seed}:{table}:"
     terms = ["CAST(0 AS BIGINT)"]
     for i in range(n_planes):
-        fast = (f"aggregate(zip_with(`{int_col}`, "
-                f"slice({plane(i)}, 1, size(`{col}`)), "
+        fast = (f"aggregate(zip_with({ci}, "
+                f"slice({plane(i)}, 1, size({c})), "
                 f"(x, w) -> x * w), CAST(0 AS BIGINT), "
                 f"(acc, v) -> acc + v)")
-        slow = (f"aggregate(zip_with(`{int_col}`, "
-                f"sequence(0, size(`{col}`) - 1), "
-                f"(x, d) -> x * ((CAST(conv(substring(md5(concat("
-                f"'{prefix}{i}:', CAST(d AS STRING))), 1, 15), 16, 10) "
-                f"AS BIGINT) % 17) - 8)), CAST(0 AS BIGINT), "
+        w = md5_int_sql("CAST(d AS STRING)", f"lsh:{seed}:{table}:{i}:")
+        slow = (f"aggregate(zip_with({ci}, "
+                f"sequence(0, size({c}) - 1), "
+                f"(x, d) -> x * (({w} % 17) - 8)), CAST(0 AS BIGINT), "
                 f"(acc, v) -> acc + v)")
-        dot = (f"CASE WHEN size(`{col}`) <= size({plane(i)}) "
+        dot = (f"CASE WHEN size({c}) <= size({plane(i)}) "
                f"THEN {fast} ELSE {slow} END")
         terms.append(f"(CASE WHEN ({dot}) > 0 THEN {1 << i} ELSE 0 END)")
     return " + ".join(terms)
@@ -243,14 +178,10 @@ def _md5_bucket_sql(col: str, n_planes: int, seed: int, table: int,
 
 def _md5_plane_weights(n_planes: int, seed: int, table: int,
                        max_dim: int = 128) -> list:
-    """Driver-side twin of ``_md5_bucket``'s per-element weight
-    expression: md5 of the same ASCII string, first 15 hex digits as a
-    60-bit integer, % 17 - 8 (non-negative dividend, so Python's % and
-    Spark's % agree)."""
-    import hashlib
-
-    return [[int(hashlib.md5(f"lsh:{seed}:{table}:{i}:{d}".encode())
-                 .hexdigest()[:15], 16) % 17 - 8
+    """Driver-side plane entries of :func:`_md5_bucket_sql`:
+    :func:`textfns.md5_int` % 17 - 8 (non-negative dividend, so
+    Python's % and Spark's % agree)."""
+    return [[md5_int(str(d), f"lsh:{seed}:{table}:{i}:") % 17 - 8
              for d in range(max_dim)]
             for i in range(n_planes)]
 
@@ -293,9 +224,9 @@ def cosine_topk_lsh(embeddings: DataFrame, queries: DataFrame,
 
     ``plane_family``: "gauss" (default - isotropic numpy hyperplanes,
     the production recall choice) or "md5" - integer-exact md5-derived
-    planes computed as JVM column algebra (:func:`_md5_bucket`), whose
-    bucket bits an independent SQL engine reproduces bit-for-bit, so
-    the whole approximate query is exact-oracle-checkable.
+    planes computed as JVM column algebra (:func:`_md5_bucket_sql`),
+    whose bucket bits an independent SQL engine reproduces bit-for-bit,
+    so the whole approximate query is exact-oracle-checkable.
     """
     masks = _probe_masks(n_planes, probe_hamming)
     corpus = with_normalized(embeddings).select(
@@ -319,9 +250,7 @@ def cosine_topk_lsh(embeddings: DataFrame, queries: DataFrame,
         # (``_md5_bucket_sql``, one py4j round-trip per table) rather
         # than through the Column DSL (hundreds of round-trips per
         # table; round 8 second pass measured expression CONSTRUCTION
-        # as the larger half of this query's wall time). Values are
-        # bit-identical - the DSL form stays as the reference and a
-        # parity test compares the two row-for-row.
+        # as the larger half of this query's wall time).
         shared_bcols = [
             F.expr(_md5_bucket_sql("raw_emb", n_planes, seed + 7919 * t,
                                    t, t + 1, "__emb_int")).alias(f"_b{t}")
@@ -382,11 +311,6 @@ def cosine_topk_lsh(embeddings: DataFrame, queries: DataFrame,
             .where(F.col("rank") <= k)
             .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
                     "rank"))
-
-
-def _ident(col: str) -> str:
-    """``col`` as a backtick-quoted SQL identifier."""
-    return "`" + col.replace("`", "``") + "`"
 
 
 def _double_sql(x: float) -> str:

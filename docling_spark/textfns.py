@@ -12,7 +12,36 @@ re-expressed as fleet-scale columns rather than per-page scores.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+
+def _ident(col: str) -> str:
+    """``col`` as a backtick-quoted SQL identifier."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def md5_int_sql(expr_sql: str, prefix: str = "", digits: int = 15) -> str:
+    """SQL text of the md5-60bit hash family: the first ``digits`` hex
+    digits of md5(prefix || expr) as a non-negative BIGINT. DuckDB
+    computes the identical value, which is what keeps the md5-mode
+    operators under exact oracles; :func:`md5_int` is the driver twin.
+    ``prefix`` is escaped into a SQL string literal."""
+    if prefix:
+        lit = prefix.replace("\\", "\\\\").replace("'", "\\'")
+        expr_sql = f"concat('{lit}', {expr_sql})"
+    return (f"CAST(conv(substring(md5({expr_sql}), 1, {digits}), 16, 10) "
+            f"AS BIGINT)")
+
+
+def md5_int(s: str | None, prefix: str = "", digits: int = 15) -> int | None:
+    """Driver-side twin of :func:`md5_int_sql`: md5 of the same UTF-8
+    bytes, so the two are bit-equal (NULL stays NULL)."""
+    if s is None:
+        return None
+    return int(hashlib.md5((prefix + s).encode()).hexdigest()[:digits], 16)
+
 
 # Tiny embedded stopword lists - deterministic language-ID heuristic.
 STOPWORDS = {
@@ -376,10 +405,12 @@ def hash_embed(documents: DataFrame, dim: int = 32) -> DataFrame:
     One explode + one (doc, bucket) hash agg + per-doc map assembly in
     codegen; the vector never exceeds ``dim`` doubles per doc.
     """
-    hx = F.md5(F.concat(F.lit("e\x01"), F.col("word")))
-    h = F.conv(F.substring(hx, 1, 15), 16, 10).cast("long")
-    # sign from the 16th hex digit: integer-exact in every engine
+    salt = "e\x01"
+    h = F.expr(md5_int_sql("`word`", salt))
+    # sign from the 16th hex digit of the same md5 (Catalyst evaluates
+    # the shared md5 once per word): integer-exact in every engine
     # (avoids float floor(h/dim) whose 2^60-range rounding could drift)
+    hx = F.md5(F.concat(F.lit(salt), F.col("word")))
     sign_bit = F.conv(F.substring(hx, 16, 1), 16, 10).cast("int") % 2
     toks = (documents
             .select("doc_id", F.explode(_word_list("text")).alias("word"))
@@ -495,8 +526,8 @@ def cdc_chunks(documents: DataFrame, divisor: int = 16,
         "doc_id", F.posexplode(words).alias("pos", "word"))
     is_boundary = F.when(
         (F.col("pos") == 0)
-        | (F.pmod(F.conv(F.substring(F.md5("word"), 1, 15), 16, 10)
-                  .cast("long"), F.lit(divisor)) == 0), 1).otherwise(0)
+        | (F.pmod(F.expr(md5_int_sql("`word`")), F.lit(divisor)) == 0),
+        1).otherwise(0)
     w_run = (Window.partitionBy("doc_id").orderBy("pos")
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     marked = toks.withColumn("chunk_id",
@@ -759,10 +790,10 @@ def sample_bucket(key_col="doc_id", buckets: int = 10000) -> Column:
     """Deterministic pseudo-uniform bucket in [0, buckets) from the
     md5 of the key's decimal string - reproducible across engines
     (DuckDB computes the identical value), stable across runs and
-    cluster sizes, unlike ``rand()``."""
-    hx = F.md5(F.col(key_col).cast("string"))
-    return (F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")
-            % F.lit(buckets))
+    cluster sizes, unlike ``rand()``. ``key_col`` names a top-level
+    column (it is rendered as one quoted identifier)."""
+    key = f"CAST({_ident(key_col)} AS STRING)"
+    return F.expr(md5_int_sql(key, digits=8)) % F.lit(buckets)
 
 
 def stratified_sample(documents: DataFrame,
@@ -954,8 +985,7 @@ def dsir_weights(documents: DataFrame, target_filter: Column,
              .select("doc_id", target_filter.alias("is_target"),
                      F.explode(_word_tokens(col)).alias("word"))
              .where(F.col("word") != ""))
-    b = (F.conv(F.substring(F.md5(F.col("word")), 1, 8), 16, 10)
-         .cast("long") % F.lit(buckets))
+    b = F.expr(md5_int_sql("`word`", digits=8)) % F.lit(buckets)
     tf = (words.select("doc_id", "is_target", b.alias("bucket"))
           .groupBy("doc_id", "is_target", "bucket")
           .agg(F.count(F.lit(1)).alias("tf"))
@@ -1256,13 +1286,13 @@ def train_split(documents: DataFrame, val_frac: float = 0.05,
     split_leakage first for near-dup leakage).
 
     One scan-side projection, no shuffle - the 100-TB split is a WHERE
-    clause on the bucket expression, pushed into the scan.
+    clause on the bucket expression, pushed into the scan. ``id_col``
+    names a top-level column (it is rendered as one quoted identifier).
     """
     t_test = int(round(test_frac * 10000))
     t_val = t_test + int(round(val_frac * 10000))
-    bucket = (F.conv(F.substring(F.md5(F.concat(
-        F.lit(f"split:{seed}:"), F.col(id_col).cast("string"))), 1, 15),
-        16, 10).cast("long") % 10000)
+    bucket = F.expr(md5_int_sql(f"CAST({_ident(id_col)} AS STRING)",
+                                f"split:{seed}:")) % 10000
     return documents.select(
         F.col(id_col), "source", bucket.alias("bucket"),
         F.when(bucket < t_test, "test")

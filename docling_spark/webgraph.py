@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from docling_spark.textfns import url_host
+from docling_spark.textfns import _ident, md5_int_sql, url_host
 
 _HREF_RE = r'href="([^"]*)"'
 _ABS_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://"
@@ -465,8 +465,7 @@ def crawl_frontier(pages: DataFrame, rules: DataFrame,
     from pyspark.sql import Window
 
     def hid(c):
-        return F.conv(F.substring(F.md5(F.col(c)), 1, 15), 16, 10) \
-            .cast("long")
+        return F.expr(md5_int_sql(_ident(c)))
 
     lg = link_graph(pages, url_col, html_col)
     edges = lg.select(hid("src_host").alias("src"),

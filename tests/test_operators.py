@@ -1,6 +1,8 @@
 """Operator tests: dedup, similarity, text functions, streaming twins,
 multimodal plumbing — over the driver-generated testdata tables."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -78,14 +80,6 @@ def test_knn_lsh_subset_of_bruteforce_domain(spark, emb):
     out = similarity.cosine_topk_lsh(emb, qs, dim=dim, k=3, n_planes=4)
     rows = out.collect()
     assert all(r["rank"] <= 3 for r in rows)
-
-
-def test_lsh_bucket_deterministic(spark, emb):
-    dim = len(emb.first()["embedding"])
-    b1 = similarity.lsh_bucket(emb.limit(20), dim).collect()
-    b2 = similarity.lsh_bucket(emb.limit(20), dim).collect()
-    assert {(r["vec_id"], r["bucket"]) for r in b1} == \
-           {(r["vec_id"], r["bucket"]) for r in b2}
 
 
 def test_textfns_basic(spark):
@@ -935,10 +929,9 @@ def test_split_leakage_planted(spark):
     splits (ids chosen so one is val, one train) -> both leaky; a
     unique doc is not."""
     from docling_spark import textfns
-    # bucket = int(md5(str(id))[:8], 16) % 100; val if < 10
-    import hashlib
+    # bucket = sample_bucket(id, 100); val if < 10
     def bucket(i):
-        return int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % 100
+        return textfns.md5_int(str(i), digits=8) % 100
     val_id = next(i for i in range(1000) if bucket(i) < 10)
     train_id = next(i for i in range(1000) if bucket(i) >= 10)
     other_id = next(i for i in range(1000)
@@ -1408,12 +1401,23 @@ def test_bpe_trainer_hand_vector(spark):
     assert (row.n_words, row.n_bpe_tokens) == (2, 4 + 1)
 
 
-def test_md5_bucket_sql_matches_dsl(spark):
-    """The SQL-text bucket (_md5_bucket_sql, the production fast-build
-    path in cosine_topk_lsh) must produce bit-identical values to the
-    Column-DSL reference (_md5_bucket) - including NULL embeddings,
-    empty arrays, and a ragged row WIDER than the precomputed planes
-    (which exercises the per-row md5 fallback branch)."""
+def _md5_bucket_ref(emb, n_planes, seed, table):
+    """Python reference for one md5-plane bucket: integer dot products
+    of floor(x * 1e6) with the hashlib plane weights. A NULL embedding
+    has NULL dots, which set no bit."""
+    ints = [math.floor(x * 1e6) for x in emb or []]
+    w = similarity._md5_plane_weights(n_planes, seed, table,
+                                      max_dim=len(ints))
+    return sum(1 << i for i in range(n_planes)
+               if sum(x * wi for x, wi in zip(ints, w[i])) > 0)
+
+
+def test_md5_bucket_sql_matches_hashlib(spark):
+    """The SQL-text bucket (_md5_bucket_sql, the production build in
+    cosine_topk_lsh) equals integer dot products computed in Python
+    from the hashlib plane weights - including NULL embeddings, empty
+    arrays, and a ragged row WIDER than the precomputed planes (which
+    exercises the per-row md5 fallback branch)."""
     n_planes, seed, table = 6, 42, 1
     weights = [similarity._md5_plane_weights(n_planes, seed, table,
                                              max_dim=8)]
@@ -1431,35 +1435,46 @@ def test_md5_bucket_sql_matches_dsl(spark):
               F.col("emb"),
               lambda x: F.floor(x.cast("double") * 1000000.0)
               .cast("long"))))
-    dsl = similarity._md5_bucket(
-        "emb", n_planes, seed, table,
-        w_col=F.element_at(F.col("__w"), 1), int_col="__emb_int")
     sql = F.expr(similarity._md5_bucket_sql(
         "emb", n_planes, seed, table, 1, "__emb_int"))
-    got = (df.select("vec_id", dsl.alias("b_dsl"), sql.alias("b_sql"))
-           .orderBy("vec_id").collect())
-    assert len(got) == len(rows)
-    for r in got:
-        assert r["b_sql"] == r["b_dsl"], (r["vec_id"], r["b_sql"],
-                                          r["b_dsl"])
+    got = {r["vec_id"]: r["b"]
+           for r in df.select("vec_id", sql.alias("b")).collect()}
+    want = {i: _md5_bucket_ref(e, n_planes, seed, table) for i, e in rows}
+    assert got == want
     # the normal rows must produce a real bucket, not degenerate zeros
-    assert any(r["b_dsl"] not in (None, 0) for r in got)
+    assert any(b not in (None, 0) for b in want.values())
 
 
-def test_hash64_sql_matches_dsl(spark):
-    """_hash64_sql (the fast-build SQL text used by
-    minhash_signatures) must produce the exact values of the _hash64
-    Column DSL in both hash families, including the \\x01 seed
-    separator surviving SQL string-literal parsing."""
+def test_hash64_sql_matches_reference(spark):
+    """_hash64_sql (the SQL text used by minhash_signatures and
+    simhash) equals hashlib md5 of '<seed>\\x01' || s in the md5 family
+    and an inline seeded xxhash64 column in the default family,
+    including the \\x01 seed separator surviving SQL string-literal
+    parsing."""
     rows = [(0, "alpha beta"), (1, ""), (2, "x'y\\z"), (3, None),
             (4, "unicode é中")]
     df = spark.createDataFrame(rows, "doc_id int, s string")
-    for mode in ("md5", "xxhash64"):
-        for seed in (0, 7, 63):
-            got = df.select(
-                "doc_id",
-                dedup._hash64(F.col("s"), seed, mode).alias("a"),
-                F.expr(dedup._hash64_sql("`s`", seed, mode)).alias("b"),
-            ).collect()
-            for r in got:
-                assert r["a"] == r["b"], (mode, seed, r)
+    for seed in (0, 7, 63):
+        got = df.select(
+            "doc_id",
+            F.xxhash64(F.col("s"), F.lit(seed)).alias("xx"),
+            F.expr(dedup._hash64_sql("`s`", seed)).alias("xx_sql"),
+            F.expr(dedup._hash64_sql("`s`", seed, "md5")).alias("md5_sql"),
+        ).collect()
+        for r in got:
+            assert r["xx_sql"] == r["xx"], (seed, r)
+            assert r["md5_sql"] == textfns.md5_int(
+                rows[r["doc_id"]][1], f"{seed}\x01"), (seed, r)
+
+
+@pytest.mark.parametrize("digits", [8, 15])
+@pytest.mark.parametrize("prefix", ["a'b", "c\\d", "\x01", "é中", ""])
+def test_md5_int_sql_matches_hashlib(spark, prefix, digits):
+    """md5_int_sql escapes quotes and backslashes in the prefix and
+    equals its hashlib twin md5_int bit for bit; NULL stays NULL."""
+    values = ["", "alpha", "é中", None]
+    exprs = [textfns.md5_int_sql(
+        "CAST(NULL AS STRING)" if v is None else f"'{v}'", prefix, digits)
+        for v in values]
+    got = list(spark.range(1).selectExpr(*exprs).first())
+    assert got == [textfns.md5_int(v, prefix, digits) for v in values]
